@@ -136,9 +136,9 @@ object Soak {
       LakeMerge.compact(classic)
     }
 
-    // NOTE: deliberately independent of BenchProbe's checksum — an
-    // equivalence checker sharing code with the thing it checks could mask
-    // a shared bug. NULL content hashes to a sentinel OUTSIDE the sha2 hex
+    // NOTE: deliberately independent of every other state checksum in the
+    // engine — an equivalence checker sharing code with the thing it checks
+    // could mask a shared bug. NULL content hashes to a sentinel OUTSIDE the sha2 hex
     // domain so null-vs-empty divergence between the paths is visible.
     def checksumOf(live: org.apache.spark.sql.DataFrame): (Long, String) = {
       val st = live.select(sha2(concat_ws("|", col("repo"), col("path"),

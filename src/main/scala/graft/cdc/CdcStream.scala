@@ -281,9 +281,12 @@ object CdcStream {
       // lineage row missing; the data commit carries the FULL lineage
       // record in its summary, so healing is a summary read + driver-side
       // row write — healed rows are byte-identical to never-crashed ones.
-      // (Pre-upgrade commits lack the summary record: fall back to
-      // recomputing the counts from the redelivered batch, with the commit
-      // supplying the facts the batch can't — snapshot id, distinct keys.)
+      // When that record is out of reach — the fenced commit was expired
+      // (commitForFence returns None), or it was written by a direct
+      // LakeMerge.mergeBatch call that records no lineage summary — the
+      // counts are recomputed from the redelivered batch, with the commit
+      // (when retained) supplying the facts the batch can't: snapshot id,
+      // distinct keys.
       val fencedCommit = table.commitForFence(queryId, batchId)
       val fencedLineage = fencedCommit
         .flatMap(_.summary.get(LineageSummaryKey)).map(parseLineageJson)
@@ -303,8 +306,9 @@ object CdcStream {
       // exists once the merge job ran), so a crash in between loses them
       // until redelivery — heal here, but only when the epoch's folded
       // lineage says invalid records actually existed (no extra job on the
-      // common clean-epoch redelivery). Unknown (pre-upgrade commit) →
-      // route unconditionally; the dead-letter fence makes it idempotent.
+      // common clean-epoch redelivery). Unknown (expired fenced commit, or
+      // one without a lineage summary) → route unconditionally; the
+      // dead-letter fence makes it idempotent.
       if (fencedLineage.forall(_.badRecords > 0))
         routeDeadLetters(batch, deadLetters, queryId, batchId)
       // a crash AFTER the data commit may also have lost a mart refresh;
@@ -446,7 +450,7 @@ object CdcStream {
     val withEpoch = table.snapshot.schema
       .add(StructField("_epoch", LongType))
     val counts = spark.read.schema(withEpoch).parquet(l0Files.map(_.path): _*)
-      .where(col("_epoch").isNotNull) // pre-upgrade L0 files lack the stamp
+      .where(col("_epoch").isNotNull) // add_files imports carry no stamp
       .select(col("_epoch"), col("repo"), col("path")).distinct()
       .groupBy(col("_epoch")).agg(count(lit(1)).as("dk"))
       .collect().map(r => r.getAs[Long]("_epoch") -> r.getAs[Long]("dk")).toMap

@@ -17,10 +17,10 @@ import org.apache.spark.sql.functions._
   * Implementation notes (scale):
   *  - `max_by(struct(...), struct(commit, lsn))` → map-side partial
   *    aggregation, ONE shuffle. With a var-length payload it plans as
-  *    SortAggregate (codegen'd); the hash-based alternative
-  *    (graft.exprs.LwwMax via ObjectHashAggregate) measured ~2.5x SLOWER
-  *    because TypedImperativeAggregate updates are interpreted per row —
-  *    see BASELINE.md. The merge path therefore avoids per-batch
+  *    SortAggregate (codegen'd); a hash-based alternative (an `lww_max`
+  *    TypedImperativeAggregate via ObjectHashAggregate, since removed)
+  *    measured ~2.5x SLOWER because TypedImperativeAggregate updates are
+  *    interpreted per row — see BASELINE.md. The merge path therefore avoids per-batch
   *    aggregation altogether (LakeMerge appends raw deltas; LWW resolves
   *    at compaction/read, sorting each row once, not once per batch).
   *  - schema drift: batches are united by name with missing columns allowed

@@ -24,10 +24,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   *  - [[MinHashSigs]](sh) ≡ the 4 per-band signatures
   *    `concat(min slice(md5(x), off, 8), min slice(..))` with families
-  *    h1 = md5(x), h2 = md5(x ~ "~"), band b reading h1 at offsets
-  *    (16b, 16b+8) for b<2 and h2 likewise for b≥2. Null elements are
-  *    skipped exactly as `array_min` skips them; an empty/all-null/NULL
-  *    array yields [null,null,null,null] exactly as the
+  *    h1 = md5(x), h2 = md5(x ~ "~"), band b reading offsets
+  *    (16(b mod 2), 16(b mod 2)+8) of h1 for b<2 and of h2 for b≥2. Null
+  *    elements are skipped exactly as `array_min` skips them; an
+  *    empty/all-null/NULL array yields [null,null,null,null] exactly as the
   *    `concat(array_min(...), ...)` chain nulls out (the downstream
   *    posexplode/explode then emits 4 rows with null sig either way).
   *  - [[SimHash16]](toks) ≡ the explode_outer + 16 × `sum(when(bit,1,-1))`

@@ -2,11 +2,13 @@ package graft.exprs
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.DataTypeMismatch
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Fused cosine similarity over two float-array columns (guide §1.2 step 2:
   * per-task work) — replaces the triple interpreted HOF fold
@@ -99,12 +101,27 @@ case class CosineSim(left: Expression, right: Expression,
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
 
-  private def isDouble(e: Expression): Boolean = e.dataType match {
-    case org.apache.spark.sql.types.ArrayType(DoubleType, _) => true
-    case org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType, _) => false
-    case t => throw new IllegalArgumentException(
-      s"cosine_sim expects array<float>/array<double>, got $t")
+  /** Both arguments must be float or double arrays, checked at analysis
+    * so misuse fails before any codegen or execution. */
+  override def checkInputDataTypes(): TypeCheckResult =
+    Seq(left, right).zipWithIndex.collectFirst {
+      case (e, i) if !isVector(e.dataType) =>
+        DataTypeMismatch(
+          errorSubClass = "UNEXPECTED_INPUT_TYPE",
+          messageParameters = Map(
+            "paramIndex" -> (if (i == 0) "first" else "second"),
+            "requiredType" -> "(\"ARRAY<FLOAT>\" or \"ARRAY<DOUBLE>\")",
+            "inputSql" -> s"\"${e.sql}\"",
+            "inputType" -> s"\"${e.dataType.sql}\""))
+    }.getOrElse(TypeCheckResult.TypeCheckSuccess)
+
+  private def isVector(t: DataType): Boolean = t match {
+    case ArrayType(DoubleType | FloatType, _) => true
+    case _ => false
   }
+
+  private def isDouble(e: Expression): Boolean =
+    e.dataType.asInstanceOf[ArrayType].elementType == DoubleType
   // resolved once, not per row (the interpreted path matters under
   // codegen fallback / wholeStage=false)
   private lazy val leftIsDouble = isDouble(left)

@@ -37,8 +37,8 @@ final case class DataFileMeta(
     maxLsn: Long = Long.MaxValue,
     rows: Long = -1L,
     // [[KeyBloom]] over the file's distinct `repo` values, lifted from its
-    // parquet dictionary pages at stage time; null (legacy manifests,
-    // dictionary-overflow files) = unknown → the file is never key-pruned
+    // parquet dictionary pages at stage time; null (dictionary-overflow
+    // files) = unknown → the file is never key-pruned
     keyBloom: String = null,
     // the bucket LAYOUT (total bucket count) `bucket` was computed under.
     // 0 = the snapshot's current layout (every file of a never-evolved
@@ -52,11 +52,9 @@ final case class DataFileMeta(
   * column name to its STABLE field id (the Iceberg identity that survives
   * renames): reads reconcile a file's columns to the current schema BY ID,
   * so a renamed column keeps reading old files and a dropped-then-re-added
-  * name cannot resurrect old data. Null on pre-upgrade snapshots → those
-  * schemas reconcile by name, exactly as before. */
-final case class SchemaInfo(id: Int, ddl: String, fieldIds: Map[String, Int] = null) {
-  def ids: Option[Map[String, Int]] = Option(fieldIds)
-}
+  * name cannot resurrect old data. Every writer records an id for every
+  * column. */
+final case class SchemaInfo(id: Int, ddl: String, fieldIds: Map[String, Int])
 
 /** Pointer to one immutable manifest file (a JSON list of [[DataFileMeta]])
   * plus the stats the planner prunes on without opening it. `group` is the
@@ -100,6 +98,10 @@ final case class ManifestMeta(
   * commit but low lsn can still be the LWW winner against a future event
   * with a higher lsn.
   *
+  * `formatVersion` is the lake metadata format the snapshot was written in;
+  * [[LakeTable.snapshotAt]] reads only [[LakeTable.FormatVersion]] and
+  * refuses every other value (the Iceberg `format-version` rule).
+  *
   * `opKind` is the STRUCTURED operation class of the commit that produced
   * this snapshot — "create" | "append" | "rewrite" | "replace" |
   * "rollback" | "metadata" — stamped at the commit sites themselves so
@@ -123,17 +125,10 @@ final case class Snapshot(
     watermarkCommit: String,
     watermarkLsn: Long,
     summary: Map[String, String],
-    // default null, NOT "metadata": Jackson fills constructor defaults for
-    // absent JSON fields, and only a null default lets snapshotAt tell a
-    // legacy snapshot (field absent → infer kind from the summary) from a
-    // new-format commit that explicitly stamped "metadata". Every commit
-    // site sets this explicitly; consumers always read via snapshotAt,
-    // which normalizes null away.
-    opKind: String = null,
-    properties: Map[String, String] = Map.empty,
-    // wall-clock commit time, stamped by commit(); -1 on pre-upgrade
-    // snapshots (TIMESTAMP AS OF falls back to the metadata file's mtime)
-    timestampMs: Long = -1L,
+    opKind: String,
+    properties: Map[String, String],
+    // wall-clock commit time, stamped by create() and commit()
+    timestampMs: Long,
     // every bucket layout the table has EVER written under, oldest first,
     // current ([[numBuckets]]) last; null (never-evolved tables) =
     // Seq(numBuckets). A point lookup probes the key's bucket under each
@@ -199,71 +194,45 @@ final class LakeTable private (val root: String, val spark: SparkSession) {
   def snapshot: Snapshot = snapshotAt(currentVersion)
 
   /** Latest still-retained version committed at or before `tsMs` (epoch
-    * millis) — the `TIMESTAMP AS OF` resolution. Pre-upgrade snapshots
-    * (no stamped commit time) use the metadata file's mtime. */
+    * millis) — the `TIMESTAMP AS OF` resolution. Every snapshot carries
+    * its commit time, stamped under the same single-host swap that orders
+    * versions, so times are monotone in version and binary search is
+    * sound. */
   def versionAtTimestamp(tsMs: Long): Int = {
-    def stamped(v: Int): Boolean = snapshotAt(v).timestampMs > 0
-    def tsOf(v: Int): Long = {
-      val snap = snapshotAt(v)
-      if (snap.timestampMs > 0) snap.timestampMs
-      else Files.getLastModifiedTime(metaDir.resolve(s"v$v.metadata.json")).toMillis
-    }
-    val lo0 = minVersionAvailable
-    if (tsOf(lo0) > tsMs)
+    def tsOf(v: Int): Long = snapshotAt(v).timestampMs
+    var lo = minVersionAvailable
+    if (tsOf(lo) > tsMs)
       throw new IllegalStateException(
-        s"no snapshot as of $tsMs: oldest retained (v$lo0) is ${tsOf(lo0)}")
-    if (stamped(lo0)) {
-      // STAMPED commit times are monotone (written under the same
-      // single-host swap that orders versions), and stamps are a SUFFIX of
-      // the version range (every commit since the stamp upgrade carries
-      // one) — so if the oldest retained snapshot is stamped, every
-      // retained one is, and binary search is sound.
-      var lo = lo0
-      var hi = currentVersion
-      while (lo < hi) {
-        val mid = lo + (hi - lo + 1) / 2
-        if (tsOf(mid) <= tsMs) lo = mid else hi = mid - 1
-      }
-      lo
-    } else {
-      // Pre-upgrade snapshots in range fall back to metadata-file mtimes,
-      // which a copied/restored metadata directory resets — monotonicity
-      // is NOT guaranteed, so scan linearly for the last version at or
-      // before tsMs instead of silently returning a wrong binary-search hit
-      // (a takeWhile here stopped at the first over-tsMs mtime and could
-      // return an EARLIER version than the last qualifying one — r6 advice).
-      (lo0 to currentVersion).filter(v => tsOf(v) <= tsMs).lastOption
-        .getOrElse(lo0)
+        s"no snapshot as of $tsMs: oldest retained (v$lo) is ${tsOf(lo)}")
+    var hi = currentVersion
+    while (lo < hi) {
+      val mid = lo + (hi - lo + 1) / 2
+      if (tsOf(mid) <= tsMs) lo = mid else hi = mid - 1
     }
+    lo
   }
 
+  /** The snapshot committed as `version` — the one place every metadata
+    * read passes through, so the format check here covers them all. A
+    * snapshot of any other [[LakeTable.FormatVersion]] (an absent field
+    * reads as 0) is refused rather than guessed at. */
   def snapshotAt(version: Int): Snapshot = {
     val p = metaDir.resolve(s"v$version.metadata.json")
     if (!Files.exists(p))
       throw new IllegalStateException(
         s"snapshot v$version is not available (expired or never committed)")
     val raw = mapper.readValue(Files.readString(p), classOf[Snapshot])
+    if (raw.formatVersion != FormatVersion)
+      throw new IllegalStateException(
+        s"lake table $root: snapshot v$version has format version " +
+          s"${raw.formatVersion}, this engine reads only format version " +
+          s"$FormatVersion — recreate the table")
     // Jackson erases Map[String, Long] values to Integer for small numbers;
     // normalize so downstream Long-typed access doesn't hit unbox CCEs.
     val fixedFences = raw.fences.asInstanceOf[Map[String, Any]].map {
       case (k, v) => k -> v.asInstanceOf[Number].longValue()
     }
-    raw.copy(
-      fences = fixedFences,
-      // pre-round-3 snapshot JSON lacks the field entirely (null here, by
-      // the constructor-default choice above). Legacy commits carry their
-      // kind only in the free-form summary, so infer it there — otherwise
-      // changelog readers would silently skip every append a pre-upgrade
-      // engine wrote (and miss its rollbacks). New-format snapshots keep
-      // their explicit stamp authoritative, whatever their summary says.
-      opKind =
-        if (raw.opKind != null) raw.opKind
-        else raw.summary.get("operation") match {
-          case Some(op) if LakeTable.legacyAppendOps.contains(op) => "append"
-          case Some("rollback") => "rollback"
-          case _ => "metadata"
-        },
-      properties = if (raw.properties == null) Map.empty else raw.properties)
+    raw.copy(fences = fixedFences)
   }
 
   def schema: StructType = snapshot.schema
@@ -323,9 +292,9 @@ final class LakeTable private (val root: String, val spark: SparkSession) {
   /** As above, plus per-file key-bloom pruning for a point lookup on
     * `repo = repoKey`: files whose bloom proves the key absent are skipped
     * (driver-side bit probe over metadata, zero file IO — see [[KeyBloom]]).
-    * Files without a bloom (legacy manifests, dictionary-overflow) always
-    * survive, so pruning can only remove files that cannot contribute rows
-    * (or tombstones — a key's tombstone carries the key) to the lookup. */
+    * Files without a bloom (dictionary-overflow) always survive, so
+    * pruning can only remove files that cannot contribute rows (or
+    * tombstones — a key's tombstone carries the key) to the lookup. */
   def filesOf(snap: Snapshot, buckets: Set[Int], repoKey: Option[String]): Seq[DataFileMeta] = {
     val fs = snap.manifests
       .filter(_.buckets.exists(buckets.contains))
@@ -556,30 +525,21 @@ final class LakeTable private (val root: String, val spark: SparkSession) {
     if (files.isEmpty) {
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], target)
     } else {
-      val targetIds = snap.schemas.find(_.id == snap.schemaId).flatMap(_.ids)
+      val targetIds = currentFieldIds(snap)
       files.groupBy(_.schemaId).map { case (sid, group) =>
         val fileInfo = snap.schemas.find(_.id == sid).get
         val fileSchema = StructType.fromDDL(fileInfo.ddl)
         val df = spark.read.schema(fileSchema).parquet(group.map(_.path): _*)
-        // reconcile by FIELD ID where both schemas carry ids (renames keep
-        // reading old files; a re-added name gets a fresh id and cannot
-        // resurrect old data), by name otherwise (legacy schemas); widening
-        // casts apply either way, unknown-to-target columns are dropped
-        // (reference `ignoreUnknownValues`)
+        // reconcile by FIELD ID (renames keep reading old files; a re-added
+        // name gets a fresh id and cannot resurrect old data); widening
+        // casts apply, unknown-to-target columns are dropped (reference
+        // `ignoreUnknownValues`)
         // None = the column's id does not exist in that file's era: read as
         // null, NEVER fall back to a same-named column (a dropped-then-
         // re-added name would resurrect old data through it)
-        val srcNameFor: String => Option[String] = (targetIds, fileInfo.ids) match {
-          case (Some(tids), Some(fids)) =>
-            val byId = fids.map(_.swap)
-            name => tids.get(name) match {
-              case Some(id) => byId.get(id)
-              case None => Some(name) // target id unknown: degrade to name
-            }
-          case _ => name => Some(name)
-        }
+        val byId = fileInfo.fieldIds.map(_.swap)
         val cols = target.fields.map { f =>
-          srcNameFor(f.name).filter(fileSchema.fieldNames.contains) match {
+          byId.get(targetIds(f.name)).filter(fileSchema.fieldNames.contains) match {
             case Some(src) => col(src).cast(f.dataType).as(f.name)
             case None => lit(null).cast(f.dataType).as(f.name)
           }
@@ -1144,7 +1104,7 @@ final class LakeTable private (val root: String, val spark: SparkSession) {
       require(!cur.fieldNames.contains(newName), s"column exists: $newName")
       val renamed = StructType(cur.fields.map(f =>
         if (f.name == oldName) f.copy(name = newName) else f))
-      val curIds = LakeTable.idsOrSynthesized(s)
+      val curIds = LakeTable.currentFieldIds(s)
       val nid = s.schemas.map(_.id).max + 1
       s.copy(
         schemas = s.schemas :+ SchemaInfo(nid, renamed.toDDL,
@@ -1167,7 +1127,7 @@ final class LakeTable private (val root: String, val spark: SparkSession) {
       val cur = s.schema
       require(cur.fieldNames.contains(name), s"no such column: $name")
       val dropped = StructType(cur.fields.filterNot(_.name == name))
-      val curIds = LakeTable.idsOrSynthesized(s)
+      val curIds = LakeTable.currentFieldIds(s)
       val nid = s.schemas.map(_.id).max + 1
       s.copy(
         schemas = s.schemas :+ SchemaInfo(nid, dropped.toDDL, curIds - name),
@@ -1210,10 +1170,7 @@ final class LakeTable private (val root: String, val spark: SparkSession) {
     * the single foreachBatch loop that owns the table runs the sweep
     * between its own commits. */
   def expireSnapshots(retainLast: Int, minAgeMs: Long = 0L): ExpireResult = {
-    def oldEnough(p: Path): Boolean = minAgeMs <= 0L ||
-      (try Files.getLastModifiedTime(p).toMillis <=
-        System.currentTimeMillis() - minAgeMs
-      catch { case NonFatal(_) => false })
+    val oldEnough = olderThan(minAgeMs)
     require(retainLast >= 1, "must retain at least the current snapshot")
     val cur = currentVersion
     // a named tag pins the retention floor: every snapshot at or after the
@@ -1294,10 +1251,7 @@ final class LakeTable private (val root: String, val spark: SparkSession) {
     val referenced = (minVersionAvailable to currentVersion).flatMap { v =>
       filesOf(snapshotAt(v)).flatMap(f => stagingDirName(f.path))
     }.toSet ++ wapPinnedDirs
-    val cutoff = System.currentTimeMillis() - minAgeMs
-    def oldEnough(p: Path): Boolean = minAgeMs == 0L ||
-      (try Files.getLastModifiedTime(p).toMillis <= cutoff
-      catch { case NonFatal(_) => false })
+    val oldEnough = olderThan(minAgeMs)
     var n = 0
     val dataDir = Paths.get(root, "data")
     if (Files.exists(dataDir)) {
@@ -1319,6 +1273,17 @@ final class LakeTable private (val root: String, val spark: SparkSession) {
       .flatMap(v => snapshotAt(v).manifests.map(_.path)).toSet
     n += sweepUnreferencedManifests(referencedManifests, oldEnough)
     n
+  }
+
+  /** The age guard of [[expireSnapshots]] and [[gcOrphans]]: true when a
+    * file was last modified at least `minAgeMs` before this call (always,
+    * for `minAgeMs <= 0`). An unreadable mtime counts as young: the sweep
+    * keeps the file. */
+  private def olderThan(minAgeMs: Long): Path => Boolean = {
+    val cutoff = System.currentTimeMillis() - minAgeMs
+    p => minAgeMs <= 0L ||
+      (try Files.getLastModifiedTime(p).toMillis <= cutoff
+      catch { case NonFatal(_) => false })
   }
 
   /** Delete every `manifest-*` file under the metadata dir that is not in
@@ -1362,6 +1327,9 @@ final class LakeTable private (val root: String, val spark: SparkSession) {
 
 object LakeTable {
 
+  /** The one lake metadata format this engine writes and reads. */
+  val FormatVersion: Int = 3
+
   /** Sentinel bucket id for L0 (unpartitioned, bucket-spanning) files. */
   val L0Bucket: Int = -1
 
@@ -1370,12 +1338,6 @@ object LakeTable {
     * of a never-evolved table). */
   def layoutOf(f: DataFileMeta, snap: Snapshot): Int =
     if (f.layoutBuckets > 0) f.layoutBuckets else snap.numBuckets
-
-  /** Operation summaries that meant "rows were appended" before snapshots
-    * carried a structural opKind (pre-round-3 metadata JSON) — used only to
-    * back-fill `opKind` when deserializing legacy snapshots. */
-  private[lake] val legacyAppendOps: Set[String] =
-    Set("merge-append", "append", "dead-letter", "append-metrics")
 
   /** The table's partition function: hash-bucket of the key column. Owned
     * here (not by the merge layer) because reads must apply the SAME
@@ -1400,21 +1362,16 @@ object LakeTable {
     * schema's id, added names mint fresh ids above every id ever used (ids
     * are never reused — the drop/re-add isolation depends on it). */
   private[lake] def assignFieldIds(s: Snapshot, merged: StructType): Map[String, Int] = {
-    val curIds = idsOrSynthesized(s)
-    val maxUsed = (s.schemas.flatMap(_.ids).flatMap(_.values) ++ curIds.values)
-      .foldLeft(0)(math.max)
-    var next = maxUsed
+    val curIds = currentFieldIds(s)
+    var next = s.schemas.flatMap(_.fieldIds.values).foldLeft(0)(math.max)
     merged.fields.map { f =>
       f.name -> curIds.getOrElse(f.name, { next += 1; next })
     }.toMap
   }
 
-  /** The current schema's field ids; a legacy snapshot (no ids recorded)
-    * gets positional ids synthesized once — name-based reconciliation for
-    * its OLD schemas is unaffected (they stay id-less). */
-  private[lake] def idsOrSynthesized(s: Snapshot): Map[String, Int] =
-    s.schemas.find(_.id == s.schemaId).flatMap(_.ids).getOrElse(
-      s.schema.fieldNames.zipWithIndex.map { case (n, i) => n -> (i + 1) }.toMap)
+  /** The current schema's field ids. */
+  private[lake] def currentFieldIds(s: Snapshot): Map[String, Int] =
+    s.schemas.find(_.id == s.schemaId).get.fieldIds
 
   private[lake] val mapper: ObjectMapper = {
     val m = new ObjectMapper()
@@ -1446,14 +1403,15 @@ object LakeTable {
     StructType(widened ++ added)
   }
 
-  /** Create a new empty table (v1 snapshot). `properties` are immutable
-    * table-level markers carried through every subsequent commit. */
+  /** Create a new empty table (v1 snapshot, stamped with its creation time
+    * like every commit). `properties` are immutable table-level markers
+    * carried through every subsequent commit. */
   def create(spark: SparkSession, root: String, schema: StructType, numBuckets: Int,
       properties: Map[String, String] = Map.empty): LakeTable = {
     val metaDir = Paths.get(root, "metadata")
     Files.createDirectories(metaDir)
     val snap = Snapshot(
-      formatVersion = 2,
+      formatVersion = FormatVersion,
       version = 1,
       snapshotId = 1L,
       parentSnapshotId = -1L,
@@ -1468,7 +1426,8 @@ object LakeTable {
       watermarkLsn = Long.MinValue,
       summary = Map("operation" -> "create"),
       opKind = "create",
-      properties = properties
+      properties = properties,
+      timestampMs = System.currentTimeMillis()
     )
     val p = metaDir.resolve("v1.metadata.json")
     Files.writeString(p, mapper.writerWithDefaultPrettyPrinter().writeValueAsString(snap))

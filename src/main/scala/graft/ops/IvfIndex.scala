@@ -299,9 +299,10 @@ final class IvfIndex private (
     * compactions must stay under Spark's broadcast limit. The decision is
     * metadata-only — the supersede bucket's manifest row/byte stats, zero
     * file IO, zero jobs — and fires [[compactPostings]] only when the
-    * backlog exceeds either bound (rows with unknown counts — legacy
-    * manifests — still contribute bytes). Defaults keep the broadcast an
-    * order of magnitude under the usual 10 MiB auto-broadcast threshold.
+    * backlog exceeds either bound (files with unknown row counts — a
+    * failed footer read — still contribute bytes). Defaults keep the
+    * broadcast an order of magnitude under the usual 10 MiB auto-broadcast
+    * threshold.
     * Returns true iff a compaction ran. Wired into [[syncFromChangelog]]
     * so the ingest loop bounds its own backlog, the same shape as the
     * lake's cost-based auto-rebucket. */

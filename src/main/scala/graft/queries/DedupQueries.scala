@@ -97,12 +97,14 @@ object DedupQueries {
         .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_dups"))
     }),
 
-    // MinHash signatures: per (doc, band) the concatenated min-hashes.
-    // Pure per-row HOF pipeline — ONE md5 per shingle, the 8 hash families
-    // are 4-hex-char slices of it, each minhash an array_min over the
-    // shingle array. Zero shuffles, no 10M-row explode: the formulation
-    // that survives a 100× scale-up (an explode×seeds + double-groupBy
-    // variant measured ~6× slower at sf0.1).
+    // MinHash signatures: per (doc, band) the concatenated min-hashes,
+    // computed per row by the fused MinHashSigs kernel
+    // (graft.exprs.DedupHashes.minhashSigs, via sigFrom) — one loop per
+    // row over the shingle array with one reused MessageDigest, each
+    // minhash a running minimum; DedupHashesSpec pins it to the HOF chain
+    // it replaced. Zero shuffles, no 10M-row explode: the formulation that
+    // survives a 100× scale-up (an explode×seeds + double-groupBy variant
+    // measured ~6× slower at sf0.1).
     "q_minhash_sig" -> ((s, dir) => {
       // two md5s per shingle → 8 independent 32-bit hash families (8-hex
       // slices). 16-bit slices measured pathological: min over ~250

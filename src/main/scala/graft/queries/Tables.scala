@@ -6,8 +6,8 @@ import org.apache.spark.sql.types._
 /** Declared read schemas for the bench/oracle parquet tables.
   *
   * `spark.read.parquet(path)` infers the schema by opening parquet footers
-  * at RELATION-RESOLUTION time — measured 55–85 ms per call on this box
-  * (SchemaCost diagnostic), paid inside every timed query's construction,
+  * at RELATION-RESOLUTION time — measured at 55–85 ms per call, paid
+  * inside every timed query's construction,
   * ~20 reads across the 16 headline queries ≈ 1 s of driver-side overhead
   * per bench run. Production tables declare their schema (catalog/metastore)
   * instead of re-inferring it per query; these constants are that catalog

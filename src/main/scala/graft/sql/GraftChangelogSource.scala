@@ -108,9 +108,9 @@ final class GraftChangelogSource(
     * ([[LakeTable.addedFilesOf]], the same change classification
     * `getBatch`'s range read uses, diffed against a path set carried
     * incrementally so the walk is O(admitted versions × files)). A commit
-    * containing a file with UNKNOWN row count (legacy files, failed footer
-    * read) is treated as cap-busting, not free: it is admitted ALONE under
-    * a rows cap — failing closed to the smallest batch, never open to an
+    * containing a file with UNKNOWN row count (a failed footer read) is
+    * treated as cap-busting, not free: it is admitted ALONE under a rows
+    * cap — failing closed to the smallest batch, never open to an
     * unbounded one. Non-append commits (metadata, compaction, rollback)
     * carry no change rows and never count against a cap; a rollback is
     * still ADMITTED (never skipped past) so `getBatch` fails loudly per

@@ -291,11 +291,9 @@ object GraftMetaTable {
         }.toArray
       case "refs" =>
         t.tags.toSeq.sortBy(_._1).iterator.map { case (name, v) =>
-          // snapshot_id is null if the tagged version was expired before
-          // the tag-floor rule existed (legacy) — never under the rule
-          val sid = try Long.box(t.snapshotAt(v).snapshotId)
-          catch { case _: Exception => null }
-          new GenericInternalRow(Array[Any](utf8(name), v, sid))
+          // a tagged version is always retained (setTag requires it, and
+          // the tag pins the expiry floor)
+          new GenericInternalRow(Array[Any](utf8(name), v, t.snapshotAt(v).snapshotId))
         }.toArray
       case "health" =>
         val fs = t.filesOf(t.snapshot)

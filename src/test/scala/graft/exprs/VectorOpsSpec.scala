@@ -84,6 +84,17 @@ class VectorOpsSpec extends SparkSpec {
     } finally spark.conf.unset("spark.sql.ansi.enabled")
   }
 
+  test("CosineSim rejects non-float-array arguments at analysis") {
+    val df = Seq((Seq(1, 2), Seq(1f, 2f), "x")).toDF("ai", "b", "s")
+    // array<int> and a non-array each fail when the plan is analysed,
+    // before any codegen or execution
+    Seq(VectorOps.cosineSim(col("ai"), col("b")),
+        VectorOps.cosineSim(col("b"), col("s"))).foreach { c =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](df.select(c))
+      assert(e.getCondition == "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE", e.getMessage)
+    }
+  }
+
   test("CosineSim handles double-array inputs (the IVF centroid side)") {
     val df = (0L until 20L).map(i => (i, vec(8), vec(8).map(f =>
         java.lang.Double.valueOf(f.toDouble))))

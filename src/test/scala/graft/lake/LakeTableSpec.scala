@@ -390,38 +390,59 @@ class LakeTableSpec extends SparkSpec {
       .select("content").collect().map(_.getString(0)).toSet == Set("c"))
   }
 
-  test("legacy snapshots (no opKind field) infer their kind from the operation summary") {
-    // a pre-upgrade engine wrote snapshot JSON without opKind; changelog
-    // readers must still see its appends instead of silently skipping them
+  test("an explicit opKind stamp is authoritative over the summary") {
     val root = tmpDir("lake")
     val t = LakeTable.create(spark, root, baseSchema, numBuckets = 2)
     val df = Seq(("r1", "p", "c001", 1L, null: String, "body"))
       .toDF(baseSchema.fieldNames.toSeq: _*).withColumn("bucket", lit(0))
-    val v = t.appendCommit(t.stage(df, 0, kind = "delta"),
-      summary = Map("operation" -> "merge-append")).version
-    // strip the structural fields from the committed JSON, as if written
-    // by the pre-round-3 format
-    import java.nio.file.{Files, Paths}
-    val metaFile = Paths.get(root, "metadata", s"v$v.metadata.json")
-    val legacy = Files.readString(metaFile)
-      .replaceAll("""(?s),\s*"opKind"\s*:\s*"[^"]*"""", "")
-      .replaceAll("""(?s),\s*"properties"\s*:\s*\{.*?\}""", "")
-    assert(!legacy.contains("opKind"), "test setup must strip the field")
-    Files.writeString(metaFile, legacy)
-
-    assert(t.snapshotAt(v).opKind == "append",
-      "merge-append summary must back-fill opKind")
-    val changes = t.readChangesBetween(v - 1, v)
-      .select("content").collect().map(_.getString(0)).toSet
-    assert(changes == Set("body"), "legacy append must surface as a change")
-
-    // ...but a NEW-format commit's explicit stamp is authoritative even
-    // when its free-form summary looks append-ish: no re-inference
+    t.appendCommit(t.stage(df, 0, kind = "delta"),
+      summary = Map("operation" -> "merge-append"))
+    // a metadata commit whose free-form summary looks append-ish: the
+    // stamped kind decides, so the changelog sees no change
     val v2 = t.commit(s => s.copy(opKind = "metadata",
       summary = Map("operation" -> "merge-append"))).version
     assert(t.snapshotAt(v2).opKind == "metadata",
       "explicit opKind stamp must never be overridden by the summary")
     assert(t.readChangesBetween(v2 - 1, v2).count() == 0)
+  }
+
+  test("snapshots of any format version but 3 are refused on read") {
+    import java.nio.file.{Files, Paths}
+    val root = tmpDir("lake")
+    val t = LakeTable.create(spark, root, baseSchema, numBuckets = 2)
+    val df = Seq(("r1", "p", "c001", 1L, null: String, "body"))
+      .toDF(baseSchema.fieldNames.toSeq: _*).withColumn("bucket", lit(0))
+    val v = t.appendCommit(t.stage(df, 0)).version
+    assert(t.snapshotAt(1).formatVersion == 3 && t.snapshotAt(v).formatVersion == 3,
+      "create stamps format version 3 and every commit carries it")
+    val metaFile = Paths.get(root, "metadata", s"v$v.metadata.json")
+    val json = Files.readString(metaFile)
+    val field = """"formatVersion"\s*:\s*3\s*,"""
+    assert(field.r.findFirstIn(json).isDefined, "test setup must find the field")
+    // an older version, and the field absent (deserializes as 0)
+    Seq(2 -> json.replaceFirst(field, "\"formatVersion\" : 2,"),
+        0 -> json.replaceFirst(field, "")).foreach { case (found, rewritten) =>
+      Files.writeString(metaFile, rewritten)
+      val e = intercept[IllegalStateException](LakeTable.load(spark, root).snapshot)
+      assert(e.getMessage.contains(root) &&
+        e.getMessage.contains(s"format version $found,") &&
+        e.getMessage.contains("reads only format version 3"), e.getMessage)
+    }
+  }
+
+  test("create stamps v1's time; TIMESTAMP AS OF before v2 is v1") {
+    val root = tmpDir("lake")
+    val t = LakeTable.create(spark, root, baseSchema, numBuckets = 2)
+    val ts1 = t.snapshotAt(1).timestampMs
+    assert(ts1 > 0, "create must stamp v1")
+    Thread.sleep(5) // v2 lands on a later millisecond
+    val ts2 = t.commit(s => s.copy(opKind = "metadata",
+      summary = Map("operation" -> "noop"))).timestampMs
+    assert(ts2 > ts1)
+    assert(t.versionAtTimestamp(ts1) == 1)
+    assert(t.versionAtTimestamp(ts2 - 1) == 1, "between v1 and v2 resolves to v1")
+    assert(t.versionAtTimestamp(ts2) == 2)
+    intercept[IllegalStateException](t.versionAtTimestamp(ts1 - 1))
   }
 
   test("readChangesBetween fails loudly when the range spans a rollback") {
