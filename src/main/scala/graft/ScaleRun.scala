@@ -63,20 +63,17 @@ object ScaleRun {
       .config("spark.executor.memory", s"${memMb - 384}m")
       .config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
       .config("spark.executor.extraJavaOptions", addOpens)
-      .config("spark.sql.shuffle.partitions",
-        (totalCores * sys.env.getOrElse("GRAFT_SHUF_MULT", "2").toInt).toString)
+      .config("spark.sql.shuffle.partitions", (totalCores * 2).toString)
       // small enough that a 2M-event micro-batch splits into ≥2 waves of
       // tasks at 4N (wave quantization caps append scaling otherwise);
       // binlog segments are single-rowgroup files, so splits are file-level
-      .config("spark.sql.files.maxPartitionBytes",
-        (sys.env.getOrElse("GRAFT_MAX_PART_MB", "8").toInt * 1024 * 1024).toString)
+      .config("spark.sql.files.maxPartitionBytes", (8 * 1024 * 1024).toString)
       .config("spark.sql.files.openCostInBytes", (1024 * 1024).toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
-      // the merge shuffle is memory/IO-bandwidth-bound on this box; codec
-      // choice trades CPU for shuffled bytes — overridable for A/B probes
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("GRAFT_SHUF_CODEC", "lz4"))
+      // the merge shuffle is memory/IO-bandwidth-bound; the codec trades
+      // CPU for shuffled bytes
+      .config("spark.io.compression.codec", "lz4")
       .config("spark.local.dir", s"$tmp/graft-spark-local")
       .config("spark.ui.enabled", "false")
       .config("spark.worker.cleanup.enabled", "true")
@@ -148,12 +145,20 @@ object ScaleRun {
 
   /** The PRODUCTION ingest shape end-to-end: Structured-Streaming binlog
     * tail (AvailableNow drain) → fenced L0 merge commits → lineage sidecar,
-    * with flush/compaction on the BACKGROUND compactor thread — the path a
-    * real deployment runs, measured under the same N vs 4N harness as the
-    * batch modes. Timed window starts after a warmup replay (separate
-    * table/checkpoint, first ~6% of events) has forced executor launch +
-    * codegen; it covers the full drain INCLUDING the final compactor
-    * drain (the work must be complete, not deferred, for eps to be honest). */
+    * measured under the same N vs 4N harness as the batch modes. Timed
+    * window starts after a warmup replay (separate table/checkpoint, first
+    * ~6% of events) has forced executor launch + codegen; it covers the
+    * full drain INCLUDING one terminal full compaction (the work must be
+    * complete, not deferred, for eps to be honest).
+    *
+    * No flush/compaction runs during the drain — exactly the terminal work
+    * of the merge/mergel0 kernel jobs, so the stream-vs-kernel ratio
+    * isolates the STREAMING machinery (microbatch planning, offset/commit
+    * logs, lineage, fenced commits) instead of comparing compaction
+    * schedules: at a handful of bench epochs an inline schedule flushes
+    * every epoch and majors almost every epoch, shuffling the data ~2.7×
+    * vs the kernel's single terminal compact — schedule cost, not stream
+    * cost. */
   private def streamJob(spark: SparkSession, binlog: String, n: Long,
       batches: Int, buckets: Int): Double = {
     import graft.cdc.{CdcStream, LakeMerge}
@@ -175,54 +180,20 @@ object ScaleRun {
         java.nio.file.Files.createLink(
           java.nio.file.Paths.get(warmBinlog, p.getFileName.toString), p)
       }
-    // GRAFT_STREAM_L0=false runs the classic (dedup-on-write) streaming
-    // shape instead — the A/B the l0-default recommendation rests on
-    val l0Mode = sys.env.getOrElse("GRAFT_STREAM_L0", "true").toBoolean
-    // Compaction scheduling for the timed run. "deferred" (default) runs
-    // NO flush/compaction during the drain and ONE full compact after it —
-    // exactly the terminal work of the merge/mergel0 kernel jobs, so the
-    // stream-vs-kernel ratio isolates the STREAMING machinery (microbatch
-    // planning, offset/commit logs, lineage, fenced commits) instead of
-    // comparing different compaction schedules: the round-4 "continuous"
-    // config flushed every epoch and majored almost every epoch, shuffling
-    // the data ~2.7× vs the kernel's single terminal compact — schedule
-    // cost, not stream cost. "continuous" keeps the round-4 behavior
-    // (read-amplification bounded DURING the run — the long-lived
-    // production schedule, amortized-logarithmic at real epoch counts but
-    // dominated by its constant at 4 toy-bench epochs).
-    val deferred = sys.env.getOrElse("GRAFT_STREAM_COMPACT", "deferred") == "deferred"
     val warm = LakeTable.create(spark, s"$dir/warm", CdcStream.binlogSchema, buckets)
     val warmMetrics = CdcStream.metricsTable(spark, s"$dir/warmMetrics")
     CdcStream.start(spark, warm, warmMetrics, warmBinlog, s"$dir/warmCkpt",
       queryId = "warm", maxFilesPerTrigger = perTrigger,
-      compactAtDeltas = if (deferred) 0 else 4,
-      l0Mode = l0Mode, asyncCompact = !deferred).awaitTermination()
-    CdcStream.drainCompaction("warm")
-    if (deferred) LakeMerge.compact(warm)
+      compactAtDeltas = 0, l0Mode = true).awaitTermination()
+    LakeMerge.compact(warm)
 
     val table = LakeTable.create(spark, s"$dir/table", CdcStream.binlogSchema, buckets)
     val metrics = CdcStream.metricsTable(spark, s"$dir/metrics")
-    // GRAFT_STREAM_FEED=true attaches a continuously-maintained reporting
-    // view (per-lang counts) — measures MartFeed's per-epoch overhead on
-    // the same harness
-    val feeds =
-      if (sys.env.getOrElse("GRAFT_STREAM_FEED", "false").toBoolean)
-        Seq(CdcStream.MartFeed(
-          graft.cdc.Mart.martTable(spark, s"$dir/mart"), Seq("lang"),
-          st => st.groupBy(col("lang")).agg(count(lit(1)).as("n_files")),
-          "bylang"))
-      else Nil
     val t0 = System.nanoTime()
     CdcStream.start(spark, table, metrics, binlog, s"$dir/ckpt",
       queryId = "bench-stream", maxFilesPerTrigger = perTrigger,
-      compactAtDeltas = if (deferred) 0 else 4, l0Mode = l0Mode,
-      asyncCompact = !deferred, martFeeds = feeds)
-      .awaitTermination()
-    CdcStream.drainCompaction("bench-stream")
-    // deferred mode: the timed window still ends FULLY COMPACTED (work is
-    // completed, not deferred past the clock) — one full resolve, the same
-    // terminal pass the kernel jobs time
-    if (deferred) LakeMerge.compact(table)
+      compactAtDeltas = 0, l0Mode = true).awaitTermination()
+    LakeMerge.compact(table)
     val secs = (System.nanoTime() - t0) / 1e9
     rmTree(dir)
     secs

@@ -35,7 +35,6 @@ import graft.lake.LakeTable
   */
 final class Compactor(
     table: LakeTable,
-    sizeRatio: Double = 1.0,
     maxDeltaFiles: Int = 16,
     flushL0MinFiles: Int = 0, // 0 = never flush L0 (classic mode)
     flushL0MinBytes: Long = 0L, // additional bytes trigger (0 = count-only)
@@ -74,10 +73,8 @@ final class Compactor(
         table.spark.sparkContext.setJobGroup("graft-compactor",
           "background compaction", interruptOnCancel = false)
         try {
-          if (flushL0MinFiles > 0)
-            LakeMerge.flushL0(table, minFiles = flushL0MinFiles,
-              minBytes = flushL0MinBytes, backfillLineage = backfillLineage)
-          LakeMerge.compactTiered(table, sizeRatio, maxDeltaFiles)
+          Compactor.housekeep(table, maxDeltaFiles, flushL0MinFiles,
+            flushL0MinBytes, backfillLineage)
           passesDone += 1
         } catch { case e: Throwable => failure = e }
       }
@@ -101,11 +98,9 @@ final class Compactor(
       // L0 tail below the running trigger (with its lineage backfill) and
       // fold any remaining deltas — the stream has stopped, so this runs
       // single-writer on the caller thread
-      if (flushL0MinFiles > 0) {
-        LakeMerge.flushL0(table, minFiles = 1, backfillLineage = backfillLineage)
-        LakeMerge.compactTiered(table, sizeRatio, maxDeltaFiles)
-        ()
-      }
+      if (flushL0MinFiles > 0)
+        Compactor.housekeep(table, maxDeltaFiles, flushL0MinFiles = 1,
+          flushL0MinBytes = 0L, backfillLineage)
     } finally {
       exec.shutdown()
       ()
@@ -115,5 +110,30 @@ final class Compactor(
   private def rethrowIfFailed(): Unit = {
     if (failure != null)
       throw new IllegalStateException("async compaction failed", failure)
+  }
+}
+
+object Compactor {
+
+  /** The one housekeeping pass, run inline by [[CdcStream.applyBatch]] or on
+    * a [[Compactor]]'s thread: flush L0 once `flushL0MinFiles` files (or
+    * `flushL0MinBytes` bytes) pile up — the L0 read-amplification bound;
+    * 0 = never flush — then let size-tiered compaction fold the resulting
+    * deltas. A bucket is major-compacted when its delta bytes reach its
+    * base bytes (each rewrite at least doubles the base → O(log) rewrites
+    * per key over the table's lifetime), or minor-merged at
+    * `maxDeltaFiles` delta files as the read-amplification cap. */
+  def housekeep(
+      table: LakeTable,
+      maxDeltaFiles: Int,
+      flushL0MinFiles: Int,
+      flushL0MinBytes: Long,
+      backfillLineage: Option[LakeTable]
+  ): Unit = {
+    if (flushL0MinFiles > 0)
+      LakeMerge.flushL0(table, minFiles = flushL0MinFiles,
+        minBytes = flushL0MinBytes, backfillLineage = backfillLineage)
+    LakeMerge.compactTiered(table, maxDeltaFiles = maxDeltaFiles)
+    ()
   }
 }

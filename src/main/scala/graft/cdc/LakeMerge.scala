@@ -8,8 +8,8 @@ import graft.lake.{DataFileMeta, LakeTable, Snapshot}
 /** Result of applying one batch onto the lake table. `distinctKeys` is the
   * exact distinct (repo, path) count of the batch, read for FREE from the
   * staged files' footer row counts when the merge deduped on write (each
-  * output row is one key); -1 when the write path didn't dedup (L0 / raw
-  * deltas) — unknown without an extra pass the hot path refuses to pay. */
+  * output row is one key); -1 for L0 appends, which skip the dedup —
+  * unknown without an extra pass the hot path refuses to pay. */
 final case class CommitStats(
     applied: Boolean,
     epochId: Long,
@@ -152,7 +152,6 @@ object LakeMerge {
       batch: DataFrame,
       fence: Option[(String, Long)] = None,
       saltPartitions: Int = 4,
-      dedupOnWrite: Boolean = true,
       l0Mode: Boolean = false,
       aliases: Map[String, String] = Map.empty,
       extraSummary: Seq[DataFileMeta] => Map[String, String] = _ => Map.empty,
@@ -187,34 +186,22 @@ object LakeMerge {
         .cast(f.dataType).as(f.name)
     }.toSeq: _*)
 
-    // dedupOnWrite=false appends raw bucketed deltas without the
-    // aggregation (cheaper for near-duplicate-free streams; LWW still
-    // resolves identically at compaction/read — it is idempotent).
-    // L0 files additionally carry a constant `_epoch` column (RLE — costs
+    // L0 files carry a constant `_epoch` column (RLE — costs
     // ~nothing): flushL0's lineage backfill needs rows attributable to
     // their commit epoch, and lsn ranges can overlap across epochs under
     // out-of-order delivery. The column is NOT part of the table schema, so
     // every schema-reconciled read drops it; only the backfill scan opts in.
     val (deltas, kind) =
       if (l0Mode) (aligned.withColumn("_epoch", lit(epochId)), "l0")
-      else if (dedupOnWrite)
-        (lwwWriteShape(aligned, nBuckets, tableSchema.fieldNames.toSeq, saltPartitions), "delta")
-      else
-        (aligned
-          .withColumn("bucket", bucketOf(col("repo"), nBuckets))
-          .repartition(col("bucket"),
-            pmod(xxhash64(col("path")), lit(saltPartitions.toLong))), "delta")
+      else (lwwWriteShape(aligned, nBuckets, tableSchema.fieldNames.toSeq, saltPartitions), "delta")
 
-    val tStage = System.nanoTime()
     val staged = table.stage(deltas, schemaId, kind = kind, layoutBuckets = nBuckets)
-    if (sys.env.contains("GRAFT_TRACE"))
-      System.err.println(f"""{"trace":"stage","sec":${(System.nanoTime() - tStage) / 1e9}%.2f,"pre_sec":${(tStage - t0) / 1e9}%.2f,"files":${staged.size}}""")
     // deduped writes know the batch's distinct-key count for free from the
-    // staged-file row counts; -1 in L0/raw modes. Recorded in the commit
+    // staged-file row counts; -1 for L0 appends. Recorded in the commit
     // summary so lineage healing after a crash between the data and metrics
     // commits can recover the exact value without re-deduplicating.
     val dk =
-      if (!l0Mode && dedupOnWrite && staged.forall(_.rows >= 0L))
+      if (!l0Mode && staged.forall(_.rows >= 0L))
         staged.map(_.rows).sum
       else -1L
     if (skipIfEmpty && dk == 0L) {
@@ -355,18 +342,14 @@ object LakeMerge {
     * re-bucketed in the pass that resolves them, never shuffled twice. A
     * thresholded compaction never touches L0 (an L0 file spans buckets and
     * can only be replaced whole); [[flushL0]] handles those. */
-  def compact(table: LakeTable, ifDeltasAtLeast: Int = 0,
-      backfillLineage: Option[LakeTable] = None): Boolean = {
+  def compact(table: LakeTable, ifDeltasAtLeast: Int = 0): Boolean = {
     val snap = table.snapshot
     val allFiles = table.filesOf(snap)
     val hasL0 = allFiles.exists(_.kind == "l0")
     if (ifDeltasAtLeast <= 0 && hasL0) {
       // L0 rows may belong to ANY bucket: resolve every bucket + L0 at once
       val buckets = (0 until snap.numBuckets).toSet + LakeTable.L0Bucket
-      val r = compactBuckets(table, snap, allFiles, buckets).compacted
-      backfillLineage.foreach(m => CdcStream.backfillDistinctKeys(
-        m, table, allFiles.filter(_.kind == "l0")))
-      return r
+      return compactBuckets(table, snap, allFiles, buckets).compacted
     }
     val deltasPerBucket = allFiles.filter(_.kind == "delta")
       .groupBy(_.bucket).view.mapValues(_.size).toMap

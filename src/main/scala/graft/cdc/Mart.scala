@@ -361,8 +361,6 @@ object Mart {
         } else Nil
       }.sum
       val tableBytes = math.max(1L, source.files.map(_.bytes).sum)
-      if (sys.env.contains("GRAFT_TRACE"))
-        System.err.println(s"[catchup] changedBytes=$changedBytes tableBytes=$tableBytes from=$fromVersion to=$toVersion")
       changedBytes.toDouble / tableBytes <= maxChangedFraction
     } catch { case scala.util.control.NonFatal(_) => true }
   }

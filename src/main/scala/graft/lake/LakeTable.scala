@@ -569,11 +569,8 @@ final class LakeTable private (val root: String, val spark: SparkSession) {
       layoutBuckets: Int = -1): Seq[DataFileMeta] = {
     val commitUuid = UUID.randomUUID().toString
     val dir = Paths.get(root, "data", commitUuid)
-    val tW = System.nanoTime()
     if (kind == "l0") df.write.parquet(dir.toString)
     else df.write.partitionBy("bucket").parquet(dir.toString)
-    if (sys.env.contains("GRAFT_TRACE"))
-      System.err.println(f"""{"trace":"write","sec":${(System.nanoTime() - tW) / 1e9}%.2f}""")
     val hasLsn = df.columns.contains("lsn")
     val hasRepo = df.schema.fields.exists(f =>
       f.name == "repo" && f.dataType == org.apache.spark.sql.types.StringType)

@@ -229,25 +229,49 @@ class CdcStreamSpec extends SparkSpec {
     assert(epochs.nonEmpty && epochs.forall(_ > 0L))
   }
 
-  test("fast lineage (observe-during-merge) records the same global counts as the full pass") {
-    val dir = tmpDir("cdcfastlin")
+  test("lineage rides the merge write: classic and L0 epochs record each segment's exact counts") {
+    val dir = tmpDir("cdclin")
     val binlog = s"$dir/binlog"
     EventGen.writeBinlog(spark, binlog, 6000L, segments = 3, nRepos = 50, pathsPerRepo = 8)
-    def drained(root: String, fast: Boolean): LakeTable = {
+    // segment mtimes follow the segment id, so with one file per trigger
+    // epoch i drains exactly segment i
+    val want = (0 until 3).map { i =>
+      spark.read.parquet(f"$binlog/segment-$i%05d.parquet")
+        .agg(count(lit(1)), count(when($"op" === "D", 1)), min($"lsn"), max($"lsn"))
+        .as[(Long, Long, Long, Long)].head()
+    }
+    val offset = """\{"part":(\d+),"minLsn":(-?\d+),"maxLsn":(-?\d+),"rows":(\d+)\}""".r
+    Seq(false, true).foreach { l0 =>
+      val root = tmpDir(s"cdclin-$l0")
       val t = LakeTable.create(spark, s"$root/table", CdcStream.binlogSchema, numBuckets = 4)
       val m = CdcStream.metricsTable(spark, s"$root/metrics")
+      val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
       CdcStream.start(spark, t, m, binlog, s"$root/ckpt", queryId = "lin",
-        maxFilesPerTrigger = 1, fastLineage = Some(fast)).awaitTermination()
-      m
+        maxFilesPerTrigger = 1, l0Mode = l0).awaitTermination()
+      assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(cachedBefore),
+        s"an epoch left a persisted RDD behind (l0=$l0)")
+      val rows = m.read().orderBy("epoch_id").collect().toSeq
+      val got = rows.map(r => (r.getAs[Long]("batch_rows"), r.getAs[Long]("deletes"),
+        r.getAs[Long]("min_lsn"), r.getAs[Long]("max_lsn")))
+      assert(got == want, s"lineage diverged from the segments (l0=$l0):\n$got\nvs\n$want")
+      rows.foreach { r =>
+        // one entry per data file the epoch wrote: (index, min, max, rows)
+        val files = offset.findAllMatchIn(r.getAs[String]("partition_offsets"))
+          .map(x => (x.group(2).toLong, x.group(3).toLong, x.group(4).toLong)).toSeq
+        assert(files.nonEmpty, s"no per-file offsets (l0=$l0)")
+        assert(files.map(_._2).max == r.getAs[Long]("max_lsn"))
+        if (l0) {
+          // L0 files hold the raw batch: their ranges and rows are the epoch's
+          assert(files.map(_._1).min == r.getAs[Long]("min_lsn"))
+          assert(files.map(_._3).sum == r.getAs[Long]("batch_rows"))
+        } else {
+          // classic files hold the per-key LWW winners (the newest event of
+          // each key always wins, an epoch's oldest may be superseded)
+          assert(files.map(_._1).min >= r.getAs[Long]("min_lsn"))
+          assert(files.map(_._3).sum == r.getAs[Long]("distinct_keys"))
+        }
+      }
     }
-    def globals(m: LakeTable) = m.read()
-      .select($"epoch_id", $"batch_rows", $"deletes", $"bad_records",
-        $"min_lsn", $"max_lsn")
-      .as[(Long, Long, Long, Long, Long, Long)].collect().toSet
-    val fast = globals(drained(tmpDir("cdcfastlin-f"), fast = true))
-    val full = globals(drained(tmpDir("cdcfastlin-s"), fast = false))
-    assert(fast == full, s"fast lineage diverged:\n$fast\nvs\n$full")
-    assert(fast.nonEmpty && fast.toSeq.map(_._2).sum == 6000L)
   }
 
   test("L0 mode: flush backfills EXACT per-epoch distinct keys into the sidecar") {

@@ -212,12 +212,12 @@ class MergePropertiesSpec extends SparkSpec {
     }, 8)
   }
 
-  test("property: random per-batch ingest modes (L0 / classic / raw) all converge to the fold oracle") {
+  test("property: random per-batch ingest modes (L0 / classic) all converge to the fold oracle") {
     // the mode is a physical-layout choice; the LWW algebra must make it
-    // invisible — any interleaving of zero-exchange L0 appends, deduped
-    // bucketed deltas and raw (dedupOnWrite=false) deltas, with or without
-    // a final flush/compact, resolves identically
-    val genMode = Gen.chooseNum(0, 2)
+    // invisible — any interleaving of zero-exchange L0 appends and deduped
+    // bucketed deltas, with or without a final flush/compact, resolves
+    // identically
+    val genMode = Gen.chooseNum(0, 1)
     checkProp(Prop.forAll(genEvents, Gen.chooseNum(1, 4),
       Gen.listOfN(4, genMode), Gen.oneOf(true, false)) {
       (events, nBatches, modes, doCompact) =>
@@ -228,8 +228,7 @@ class MergePropertiesSpec extends SparkSpec {
         batches.filter(_.nonEmpty).zipWithIndex.foreach { case (b, i) =>
           modes(i % modes.size) match {
             case 0 => LakeMerge.mergeBatch(table, b.toDF(), Some(("m", i.toLong)), l0Mode = true)
-            case 1 => LakeMerge.mergeBatch(table, b.toDF(), Some(("m", i.toLong)))
-            case _ => LakeMerge.mergeBatch(table, b.toDF(), Some(("m", i.toLong)), dedupOnWrite = false)
+            case _ => LakeMerge.mergeBatch(table, b.toDF(), Some(("m", i.toLong)))
           }
         }
         if (doCompact) { LakeMerge.flushL0(table); LakeMerge.compact(table); () }

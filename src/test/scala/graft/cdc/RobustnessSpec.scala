@@ -48,9 +48,9 @@ class RobustnessSpec extends SparkSpec {
     assert(LakeMerge.readState(table).where($"lsn" >= 9000L).count() == 0)
   }
 
-  test("dead letters lost to a crash between data commit and routing heal on redelivery (both lineage modes)") {
-    Seq(true, false).foreach { fast =>
-      val dir = tmpDir(s"dlqheal-$fast")
+  test("dead letters lost to a crash between data commit and routing heal on redelivery (classic and L0 writes)") {
+    Seq(false, true).foreach { l0 =>
+      val dir = tmpDir(s"dlqheal-$l0")
       val table = LakeTable.create(spark, s"$dir/table", CdcStream.binlogSchema, numBuckets = 4)
       val metrics = CdcStream.metricsTable(spark, s"$dir/metrics")
       val good = EventGen.events(spark, 300L, nRepos = 10, pathsPerRepo = 5)
@@ -60,19 +60,19 @@ class RobustnessSpec extends SparkSpec {
       // "crash" window: the data commit lands but the dead-letter routing
       // never runs (simulated by withholding the dead-letter table)
       val st = CdcStream.applyBatch(table, metrics, batch, "q", 0L,
-        deadLetters = None, fastLineage = Some(fast))
+        deadLetters = None, l0Mode = l0)
       assert(st.applied)
       // redelivery with the dead-letter table back: the folded lineage
       // record says bad > 0, so routing must be healed
       val dlq = CdcStream.deadLetterTable(spark, s"$dir/dlq")
       val st2 = CdcStream.applyBatch(table, metrics, batch, "q", 0L,
-        deadLetters = Some(dlq), fastLineage = Some(fast))
+        deadLetters = Some(dlq), l0Mode = l0)
       assert(!st2.applied)
-      assert(dlq.read().count() == 1, s"dead letter not healed (fast=$fast)")
+      assert(dlq.read().count() == 1, s"dead letter not healed (l0=$l0)")
       assert(dlq.fence("q") == 0L)
       // a further redelivery is a no-op (fence)
       CdcStream.applyBatch(table, metrics, batch, "q", 0L,
-        deadLetters = Some(dlq), fastLineage = Some(fast))
+        deadLetters = Some(dlq), l0Mode = l0)
       assert(dlq.read().count() == 1)
     }
   }
