@@ -62,29 +62,22 @@ object LakeMerge {
     ()
   }
 
-  /** Point lookup: the current live state of ONE repo. Metadata pruning
-    * reads only that repo's hash bucket (1/numBuckets of the table) plus
-    * any not-yet-compacted L0 files (bounded by the flush trigger), then
-    * filters and resolves — at 100 TB this touches a handful of files, not
-    * the table. The residual repo filter is pushed into the parquet scan. */
-  def readRepo(table: LakeTable, repo: String): DataFrame = {
-    // three-level metadata pruning, all driver-side (zero Spark jobs before
-    // the action): per-era hash bucket (1/numBuckets of the files, probed
-    // under EVERY layout the table has written — bucket evolution), then
-    // per-file key bloom (only the files that actually carry the key), then
-    // the parquet-pushed residual filter below
-    MergeEngine.liveView(
-      MergeEngine.dedupBatch(
-        table.readForKey(repo).where(col("repo") === repo)))
-  }
+  /** Point lookup: the current live state of ONE repo — see [[readRepos]]. */
+  def readRepo(table: LakeTable, repo: String): DataFrame = readRepos(table, Seq(repo))
 
-  /** Multi-key point lookup: the live state of a SET of repos, with the
-    * same three-level metadata pruning as [[readRepo]] applied per key
-    * over ONE read plan (SQL `repo IN (…)` routes here). */
-  def readRepos(table: LakeTable, repos: Seq[String]): DataFrame =
-    MergeEngine.liveView(
-      MergeEngine.dedupBatch(
-        table.readForKeys(repos).where(col("repo").isin(repos: _*))))
+  /** Multi-key point lookup: the live state of a SET of repos, resolved on
+    * the driver from the snapshot current at the call. Metadata pruning
+    * picks the files (per-era hash bucket, unflushed L0 files, per-file key
+    * bloom — [[LakeTable.filesForKey]]), [[LakeTable.readKeysLocal]] reads
+    * only their rows of these repos with the keys pushed into the parquet
+    * reader, and [[MergeEngine.liveViewLocal]] folds LWW. The returned
+    * DataFrame is local: building it and collecting it run zero Spark jobs,
+    * and later commits do not change it. At 100 TB this still touches a
+    * handful of files, not the table. */
+  def readRepos(table: LakeTable, repos: Seq[String]): DataFrame = {
+    val (schema, rows) = table.readKeysLocal(repos)
+    MergeEngine.liveViewLocal(table.spark, schema, rows)
+  }
 
   /** The write-aligned single-exchange LWW shape shared by the classic
     * merge path and every compaction: repartition by (bucket, salt), then

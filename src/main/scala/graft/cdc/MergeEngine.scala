@@ -1,7 +1,13 @@
 package graft.cdc
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, GenericInternalRow, InterpretedOrdering, SortOrder}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Last-writer-wins MERGE semantics (SURVEY.md §7.3).
   *
@@ -74,6 +80,34 @@ object MergeEngine {
   /** The consumer-facing view of a tombstone-retaining state. */
   def liveView(state: DataFrame): DataFrame =
     state.where(col("op") =!= "D").drop("op")
+
+  /** `liveView(dedupBatch(rows))` folded on the driver, for point reads of
+    * a few hundred rows: the LWW winner per key by `(commit, lsn)` under
+    * Spark's own ordering (nulls first, as `max_by` compares the struct),
+    * then the rows `liveView` drops — winners with `op = 'D'` or a null
+    * `op` — are dropped. The result is a LOCAL DataFrame with the Spark
+    * shape's column names, order and types; building and collecting it
+    * run zero Spark jobs. `rows` are in `schema`. */
+  def liveViewLocal(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame = {
+    def ref(c: String) = BoundReference(schema.fieldIndex(c), schema(c).dataType, nullable = true)
+    val newer = new InterpretedOrdering(orderCols.map(c => SortOrder(ref(c), Ascending)))
+    val key = keyCols.map(ref)
+    val winners = scala.collection.mutable.HashMap.empty[Seq[Any], InternalRow]
+    rows.foreach { r =>
+      val k = key.map(_.eval(r))
+      if (winners.get(k).forall(w => newer.compare(r, w) > 0)) winners(k) = r
+    }
+    val out = StructType(keyCols.map(schema(_)) ++
+      schema.fields.filterNot(f => keyCols.contains(f.name) || f.name == "op"))
+    val outRefs = out.fieldNames.toSeq.map(ref)
+    val op = ref("op")
+    val tombstone = UTF8String.fromString("D")
+    val toRow = CatalystTypeConverters.createToScalaConverter(out)
+    val live = winners.values.iterator
+      .filter(r => op.eval(r) match { case null => false; case o => o != tombstone })
+      .map(r => toRow(new GenericInternalRow(outRefs.map(_.eval(r)).toArray)).asInstanceOf[Row])
+    spark.createDataFrame(live.toSeq.asJava, out)
+  }
 
   /** Column-pruning-friendly resolved live view: LWW winner per key via
     * `row_number()=1` instead of `max_by(struct(ALL columns))`. The max_by

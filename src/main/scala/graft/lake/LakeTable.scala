@@ -7,8 +7,18 @@ import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.FilterApi
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, GenericInternalRow, Literal}
+import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.{LegacyBehaviorPolicy, SQLConf}
 import org.apache.spark.sql.types._
 
 /** One data file tracked by a manifest. `bucket` = hash-bucket of `repo`
@@ -175,6 +185,14 @@ final class LakeTable private (val root: String, val spark: SparkSession) {
   private val manifestCache =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[DataFileMeta]]()
 
+  /** A published `v<N>.metadata.json` never changes either (the hard-link
+    * swap creates it whole), so each is parsed once per handle. Only the
+    * newest [[SnapshotCacheSize]] versions are kept: `snapshot`, `fence`
+    * and `schema` hit the current one on every call, while history walks
+    * (binary searches, GC) would otherwise pin every version ever read. */
+  private val snapshotCache =
+    new java.util.concurrent.ConcurrentSkipListMap[Int, Snapshot]()
+
   // ---------------------------------------------------------------- reads
 
   def currentVersion: Int = {
@@ -215,12 +233,24 @@ final class LakeTable private (val root: String, val spark: SparkSession) {
   /** The snapshot committed as `version` — the one place every metadata
     * read passes through, so the format check here covers them all. A
     * snapshot of any other [[LakeTable.FormatVersion]] (an absent field
-    * reads as 0) is refused rather than guessed at. */
+    * reads as 0) is refused rather than guessed at. The existence check
+    * runs on every call, so an expired version throws even when cached. */
   def snapshotAt(version: Int): Snapshot = {
     val p = metaDir.resolve(s"v$version.metadata.json")
     if (!Files.exists(p))
       throw new IllegalStateException(
         s"snapshot v$version is not available (expired or never committed)")
+    val cached = snapshotCache.get(version)
+    if (cached != null) cached
+    else {
+      val parsed = parseSnapshot(version, p)
+      snapshotCache.put(version, parsed)
+      while (snapshotCache.size > SnapshotCacheSize) snapshotCache.pollFirstEntry()
+      parsed
+    }
+  }
+
+  private def parseSnapshot(version: Int, p: Path): Snapshot = {
     val raw = mapper.readValue(Files.readString(p), classOf[Snapshot])
     if (raw.formatVersion != FormatVersion)
       throw new IllegalStateException(
@@ -463,8 +493,84 @@ final class LakeTable private (val root: String, val spark: SparkSession) {
     * The caller MUST filter `repo IN keys` on the result. */
   def readForKeys(keys: Seq[String]): DataFrame = {
     val snap = snapshot
-    readFiles(snap,
-      keys.distinct.flatMap(k => filesForKey(snap, k)).distinctBy(_.path))
+    readFiles(snap, filesForKeys(snap, keys))
+  }
+
+  /** The deduplicated union of [[filesForKey]] over `keys`. */
+  def filesForKeys(snap: Snapshot, keys: Seq[String]): Seq[DataFileMeta] =
+    keys.distinct.flatMap(k => filesForKey(snap, k)).distinctBy(_.path)
+
+  /** Driver-side point read of the snapshot current at the call: the rows
+    * whose `repo` is one of `keys`, from the files [[filesForKeys]] admits,
+    * reconciled to that snapshot's schema by [[LakeTable.eraColumns]]
+    * (widening casts run in the expression interpreter). Returns the
+    * schema and the rows, unresolved (the caller folds LWW).
+    *
+    * Runs no Spark job: the candidate files are read with parquet-mr on the
+    * driver, in parallel like [[stage]]'s footer reads, and the key set is
+    * a parquet filter, so row groups and pages whose stats or dictionary
+    * exclude every key are skipped and the rest are record-filtered. A few
+    * hundred rows over a handful of files cost less to read here than one
+    * Spark job costs to plan and schedule. */
+  def readKeysLocal(keys: Seq[String]): (StructType, Seq[InternalRow]) = {
+    val snap = snapshot
+    val tz = Option(spark.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key))
+    val binKeys = keys.distinct.map(Binary.fromString)
+    lazy val pred = FilterCompat.get( // no keys: no files, never built
+      if (binKeys.sizeIs == 1) FilterApi.eq(FilterApi.binaryColumn("repo"), binKeys.head)
+      else FilterApi.in(FilterApi.binaryColumn("repo"), binKeys.toSet.asJava))
+    val reads = filesForKeys(snap, keys).groupBy(_.schemaId).toSeq.flatMap {
+      case (sid, group) =>
+        val era = snap.schemas.find(_.id == sid).get
+        val eraSchema = StructType.fromDDL(era.ddl)
+        val mapping = eraColumns(snap, era)
+        // only the era columns the current schema still reads
+        val requested = StructType(mapping.flatMap(_._2).map(eraSchema(_)))
+        val project = mapping.map {
+          case (f, Some(src)) =>
+            val i = requested.fieldIndex(src)
+            val ref = BoundReference(i, requested(i).dataType, nullable = true)
+            if (ref.dataType == f.dataType) ref else Cast(ref, f.dataType, tz)
+          case (f, None) => Literal(null, f.dataType)
+        }
+        val conf = parquetReadConf(requested)
+        group.map(f => (f.path, conf, project))
+    }
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val rows = Await.result(
+      Future.traverse(reads) { case (path, conf, project) =>
+        Future {
+          // row-based (not vectorized) reader; the engine's files come
+          // from Spark >= 3 writers, so no calendar rebase applies
+          val reader = ParquetReader
+            .builder(new ParquetReadSupport(None, false,
+              RebaseSpec(LegacyBehaviorPolicy.CORRECTED),
+              RebaseSpec(LegacyBehaviorPolicy.CORRECTED)),
+              new org.apache.hadoop.fs.Path(path))
+            .withConf(conf).withFilter(pred).useRecordFilter().build()
+          // copy: the reader reuses its row, and strings point into its pages
+          try Iterator.continually(reader.read()).takeWhile(_ != null)
+            .map(r => new GenericInternalRow(project.map(_.eval(r)).toArray).copy())
+            .toVector
+          finally reader.close()
+        }
+      }, 10.minutes)
+    (snap.schema, rows.flatten)
+  }
+
+  /** A Hadoop conf for Spark's row-based parquet read support returning
+    * `requested` — the settings its schema converter reads unconditionally,
+    * taken from this session as Spark's own scan does. */
+  private def parquetReadConf(requested: StructType): Configuration = {
+    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+    Seq(SQLConf.PARQUET_BINARY_AS_STRING, SQLConf.PARQUET_INT96_AS_TIMESTAMP,
+      SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
+      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG)
+      .foreach(e => conf.set(e.key, spark.conf.get(e.key)))
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, requested.json)
+    conf
   }
 
   // ------------------------------------------------------------ named refs
@@ -525,26 +631,14 @@ final class LakeTable private (val root: String, val spark: SparkSession) {
     if (files.isEmpty) {
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], target)
     } else {
-      val targetIds = currentFieldIds(snap)
       files.groupBy(_.schemaId).map { case (sid, group) =>
-        val fileInfo = snap.schemas.find(_.id == sid).get
-        val fileSchema = StructType.fromDDL(fileInfo.ddl)
-        val df = spark.read.schema(fileSchema).parquet(group.map(_.path): _*)
-        // reconcile by FIELD ID (renames keep reading old files; a re-added
-        // name gets a fresh id and cannot resurrect old data); widening
-        // casts apply, unknown-to-target columns are dropped (reference
-        // `ignoreUnknownValues`)
-        // None = the column's id does not exist in that file's era: read as
-        // null, NEVER fall back to a same-named column (a dropped-then-
-        // re-added name would resurrect old data through it)
-        val byId = fileInfo.fieldIds.map(_.swap)
-        val cols = target.fields.map { f =>
-          byId.get(targetIds(f.name)).filter(fileSchema.fieldNames.contains) match {
-            case Some(src) => col(src).cast(f.dataType).as(f.name)
-            case None => lit(null).cast(f.dataType).as(f.name)
-          }
-        }
-        df.select(cols.toSeq: _*)
+        val era = snap.schemas.find(_.id == sid).get
+        val df = spark.read.schema(StructType.fromDDL(era.ddl))
+          .parquet(group.map(_.path): _*)
+        df.select(eraColumns(snap, era).map {
+          case (f, Some(src)) => col(src).cast(f.dataType).as(f.name)
+          case (f, None) => lit(null).cast(f.dataType).as(f.name)
+        }: _*)
       }.reduce(_ unionByName _)
     }
   }
@@ -1327,6 +1421,9 @@ object LakeTable {
   /** The one lake metadata format this engine writes and reads. */
   val FormatVersion: Int = 3
 
+  /** Parsed snapshots one handle keeps (newest versions). */
+  private val SnapshotCacheSize = 64
+
   /** Sentinel bucket id for L0 (unpartitioned, bucket-spanning) files. */
   val L0Bucket: Int = -1
 
@@ -1369,6 +1466,23 @@ object LakeTable {
   /** The current schema's field ids. */
   private[lake] def currentFieldIds(s: Snapshot): Map[String, Int] =
     s.schemas.find(_.id == s.schemaId).get.fieldIds
+
+  /** How a file written in schema era `era` reads under `snap`'s current
+    * schema: each current field, in order, with the era column it reads.
+    * Reconciliation is by FIELD ID (renames keep reading old files; a
+    * re-added name gets a fresh id and cannot resurrect old data); the
+    * caller casts the column to the field's type (widening), and era
+    * columns unknown to the current schema are not read (reference
+    * `ignoreUnknownValues`). None = the field's id does not exist in that
+    * era: read as null, NEVER fall back to a same-named column (a
+    * dropped-then-re-added name would resurrect old data through it). */
+  private[lake] def eraColumns(snap: Snapshot, era: SchemaInfo): Seq[(StructField, Option[String])] = {
+    val targetIds = currentFieldIds(snap)
+    val eraNames = StructType.fromDDL(era.ddl).fieldNames.toSet
+    val byId = era.fieldIds.map(_.swap)
+    snap.schema.fields.toSeq.map(f =>
+      f -> byId.get(targetIds(f.name)).filter(eraNames.contains))
+  }
 
   private[lake] val mapper: ObjectMapper = {
     val m = new ObjectMapper()

@@ -3,7 +3,7 @@ package graft.util
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.types._
@@ -18,6 +18,12 @@ import org.apache.spark.sql.types._
   * vectorized reader consumes like any other. NOT for data-plane writes —
   * no compression tuning, no row-group management, one writer per call. */
 object TinyParquet {
+
+  /** One Hadoop conf for every write: `new Configuration()` re-parses
+    * Hadoop's default XML resources. Writers only read it — the schema goes
+    * to the writer builder, not into the conf — so the stream thread and
+    * the compactor thread can share it. */
+  private lazy val conf = new Configuration()
 
   private def messageType(schema: StructType): MessageType = {
     val b = Types.buildMessage()
@@ -40,9 +46,7 @@ object TinyParquet {
     * one parquet file at `path`. */
   def write(path: String, schema: StructType, rows: Seq[Seq[Any]]): Unit = {
     val mt = messageType(schema)
-    val conf = new Configuration()
-    GroupWriteSupport.setSchema(mt, conf)
-    val writer = ExampleParquetWriter.builder(new Path(path)).withConf(conf).build()
+    val writer = ExampleParquetWriter.builder(new Path(path)).withConf(conf).withType(mt).build()
     val factory = new SimpleGroupFactory(mt)
     try rows.foreach { vals =>
       require(vals.size == schema.fields.length,
