@@ -25,6 +25,24 @@ import graft.lake.LakeTable
   * default on 32 cores. Exits non-zero on divergence.
   */
 object Soak {
+  /** Order-free (rows, sum of sha256 prefixes) checksum of a live state,
+    * computed distributively — the equivalence check of this soak and of
+    * [[SoakXL]]. It deliberately shares no code with [[MergeEngine]] or any
+    * other state checksum in the engine: an equivalence checker sharing
+    * code with the thing it checks could mask a shared bug. NULL content
+    * hashes to a sentinel OUTSIDE the sha2 hex domain so null-vs-empty
+    * divergence between the paths is visible. */
+  def checksumOf(live: org.apache.spark.sql.DataFrame): (Long, String) = {
+    val st = live.select(sha2(concat_ws("|", col("repo"), col("path"),
+      coalesce(sha2(col("content"), 256), lit("null-content")),
+      coalesce(col("lang"), lit("∅"))), 256).as("h"))
+    val r = st.agg(
+      count(lit(1)).as("n"),
+      sum(conv(substring(col("h"), 1, 15), 16, 10).cast("decimal(38,0)")).as("sum"))
+      .collect()(0)
+    (r.getLong(0), r.getDecimal(1).toString)
+  }
+
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 20000000L
     val ownDir = args.length <= 1 // only delete what we created
@@ -136,20 +154,6 @@ object Soak {
       LakeMerge.compact(classic)
     }
 
-    // NOTE: deliberately independent of every other state checksum in the
-    // engine — an equivalence checker sharing code with the thing it checks
-    // could mask a shared bug. NULL content hashes to a sentinel OUTSIDE the sha2 hex
-    // domain so null-vs-empty divergence between the paths is visible.
-    def checksumOf(live: org.apache.spark.sql.DataFrame): (Long, String) = {
-      val st = live.select(sha2(concat_ws("|", col("repo"), col("path"),
-        coalesce(sha2(col("content"), 256), lit("null-content")),
-        coalesce(col("lang"), lit("∅"))), 256).as("h"))
-      val r = st.agg(
-        count(lit(1)).as("n"),
-        sum(conv(substring(col("h"), 1, 15), 16, 10).cast("decimal(38,0)")).as("sum"))
-        .collect()(0)
-      (r.getLong(0), r.getDecimal(1).toString)
-    }
     def checksum(table: LakeTable): (Long, String) =
       checksumOf(LakeMerge.readState(table))
     val (rowsA, sumA) = t("checksum l0")(checksum(l0))

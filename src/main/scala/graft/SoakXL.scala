@@ -205,19 +205,10 @@ object SoakXL {
     assert(unknownDk == 0L, s"$unknownDk lineage rows still carry distinct_keys=-1")
 
     // ---- 3-bucket equivalence vs independent classic resolution -------
-    def checksumOf(live: org.apache.spark.sql.DataFrame): (Long, String) = {
-      val st = live.select(sha2(concat_ws("|", col("repo"), col("path"),
-        coalesce(sha2(col("content"), 256), lit("null-content")),
-        coalesce(col("lang"), lit("∅"))), 256).as("h"))
-      val r = st.agg(count(lit(1)).as("n"),
-        sum(conv(substring(col("h"), 1, 15), 16, 10).cast("decimal(38,0)")).as("sum"))
-        .collect()(0)
-      (r.getLong(0), r.getDecimal(1).toString)
-    }
     val results = sampleBuckets.map { b =>
-      val streamed = checksumOf(MergeEngine.liveView(MergeEngine.dedupBatch(
+      val streamed = Soak.checksumOf(MergeEngine.liveView(MergeEngine.dedupBatch(
         table.readBuckets(Set(b, LakeTable.L0Bucket)))))
-      val oracle = checksumOf(MergeEngine.liveView(MergeEngine.dedupBatch(
+      val oracle = Soak.checksumOf(MergeEngine.liveView(MergeEngine.dedupBatch(
         EventGen.events(spark, n, nRepos = nRepos, pathsPerRepo = pathsPerRepo,
           skew = 2.0, langFromLsn = n / 2, numPartitions = 256)
           .where(LakeTable.bucketExpr(col("repo"), buckets) === b))))

@@ -79,6 +79,29 @@ object LakeMerge {
     MergeEngine.liveViewLocal(table.spark, schema, rows)
   }
 
+  /** The batch prelude shared by [[mergeBatch]] and [[wapStage]]: the
+    * renamed-field fallback (BEFORE evolution, so an old name can never
+    * spawn a phantom column alongside the real one), additive / widening
+    * schema evolution driven by the batch, then alignment to the evolved
+    * table schema (null-fill/cast for older producers). The table schema
+    * retains `op`: tombstones are stored (see MergeEngine.apply scaladoc),
+    * filtered out by [[readState]]. Returns the aligned batch and the id of
+    * the schema it was written under. */
+  private def evolveAndAlign(table: LakeTable, batch: DataFrame,
+      aliases: Map[String, String]): (DataFrame, Int) = {
+    val renamed = aliases.foldLeft(batch) { case (df, (oldName, newName)) =>
+      if (df.columns.contains(oldName) && !df.columns.contains(newName))
+        df.withColumnRenamed(oldName, newName)
+      else df
+    }
+    val schemaId = table.evolveSchema(renamed.schema)
+    val aligned = renamed.select(table.schema.fields.map { f =>
+      (if (renamed.columns.contains(f.name)) col(f.name) else lit(null))
+        .cast(f.dataType).as(f.name)
+    }.toSeq: _*)
+    (aligned, schemaId)
+  }
+
   /** The write-aligned single-exchange LWW shape shared by the classic
     * merge path and every compaction: repartition by (bucket, salt), then
     * dedup to the per-key winner — the groupBy REUSES the exchange
@@ -158,26 +181,7 @@ object LakeMerge {
 
     val snap = table.snapshot
     val nBuckets = snap.numBuckets
-
-    // renamed-field fallback BEFORE evolution, so the old name can never
-    // spawn a phantom column alongside the real one
-    val renamed = aliases.foldLeft(batch) { case (df, (oldName, newName)) =>
-      if (df.columns.contains(oldName) && !df.columns.contains(newName))
-        df.withColumnRenamed(oldName, newName)
-      else df
-    }
-
-    // additive / widening schema evolution driven by the incoming batch.
-    // The table schema retains `op`: tombstones are stored (see
-    // MergeEngine.apply scaladoc), filtered out by [[readState]].
-    val schemaId = table.evolveSchema(renamed.schema)
-    val tableSchema = table.schema
-
-    // align to the evolved table schema (null-fill/cast for older producers)
-    val aligned = renamed.select(tableSchema.fields.map { f =>
-      (if (renamed.columns.contains(f.name)) col(f.name) else lit(null))
-        .cast(f.dataType).as(f.name)
-    }.toSeq: _*)
+    val (aligned, schemaId) = evolveAndAlign(table, batch, aliases)
 
     // L0 files carry a constant `_epoch` column (RLE — costs
     // ~nothing): flushL0's lineage backfill needs rows attributable to
@@ -186,7 +190,7 @@ object LakeMerge {
     // every schema-reconciled read drops it; only the backfill scan opts in.
     val (deltas, kind) =
       if (l0Mode) (aligned.withColumn("_epoch", lit(epochId)), "l0")
-      else (lwwWriteShape(aligned, nBuckets, tableSchema.fieldNames.toSeq, saltPartitions), "delta")
+      else (lwwWriteShape(aligned, nBuckets, aligned.columns.toSeq, saltPartitions), "delta")
 
     val staged = table.stage(deltas, schemaId, kind = kind, layoutBuckets = nBuckets)
     // deduped writes know the batch's distinct-key count for free from the
@@ -267,19 +271,9 @@ object LakeMerge {
       saltPartitions: Int = 4,
       aliases: Map[String, String] = Map.empty): Seq[DataFileMeta] = {
     val snap = table.snapshot
-    val renamed = aliases.foldLeft(batch) { case (df, (oldName, newName)) =>
-      if (df.columns.contains(oldName) && !df.columns.contains(newName))
-        df.withColumnRenamed(oldName, newName)
-      else df
-    }
-    val schemaId = table.evolveSchema(renamed.schema)
-    val tableSchema = table.schema
-    val aligned = renamed.select(tableSchema.fields.map { f =>
-      (if (renamed.columns.contains(f.name)) col(f.name) else lit(null))
-        .cast(f.dataType).as(f.name)
-    }.toSeq: _*)
+    val (aligned, schemaId) = evolveAndAlign(table, batch, aliases)
     val deltas = lwwWriteShape(aligned, snap.numBuckets,
-      tableSchema.fieldNames.toSeq, saltPartitions)
+      aligned.columns.toSeq, saltPartitions)
     val staged = table.stage(deltas, schemaId, kind = "delta",
       layoutBuckets = snap.numBuckets)
     table.wapWrite(wapId, schemaId, staged)

@@ -317,25 +317,10 @@ final class LakeTable private (val root: String, val spark: SparkSession) {
     * (an L0 file may hold rows of ANY bucket), while a rewrite that
     * replaces only bucketed files passes `Set(b)`. */
   def filesOf(snap: Snapshot, buckets: Set[Int]): Seq[DataFileMeta] =
-    filesOf(snap, buckets, None)
-
-  /** As above, plus per-file key-bloom pruning for a point lookup on
-    * `repo = repoKey`: files whose bloom proves the key absent are skipped
-    * (driver-side bit probe over metadata, zero file IO — see [[KeyBloom]]).
-    * Files without a bloom (dictionary-overflow) always survive, so
-    * pruning can only remove files that cannot contribute rows (or
-    * tombstones — a key's tombstone carries the key) to the lookup. */
-  def filesOf(snap: Snapshot, buckets: Set[Int], repoKey: Option[String]): Seq[DataFileMeta] = {
-    val fs = snap.manifests
+    snap.manifests
       .filter(_.buckets.exists(buckets.contains))
       .flatMap(m => loadManifest(m.path))
       .filter(f => buckets.contains(f.bucket))
-    repoKey match {
-      case Some(k) =>
-        fs.filter(f => f.keyBloom == null || KeyBloom.mightContain(f.keyBloom, k))
-      case None => fs
-    }
-  }
 
   private def loadManifest(path: String): Seq[DataFileMeta] =
     manifestCache.computeIfAbsent(path, p =>
@@ -356,14 +341,9 @@ final class LakeTable private (val root: String, val spark: SparkSession) {
     * their bucket-spanning rows are filtered back down to `buckets` with
     * the table's partition expression — unless every bucket is requested,
     * in which case the per-row filter would be a no-op and is skipped. */
-  def readBuckets(buckets: Set[Int]): DataFrame = readBuckets(buckets, None)
-
-  /** As above with key-bloom file skipping for a `repo = repoKey` point
-    * lookup (callers MUST still apply the row filter — blooms admit false
-    * positives and L0 files span buckets). */
-  def readBuckets(buckets: Set[Int], repoKey: Option[String]): DataFrame = {
+  def readBuckets(buckets: Set[Int]): DataFrame = {
     val snap = snapshot
-    val files = filesOf(snap, buckets, repoKey)
+    val files = filesOf(snap, buckets)
     val (l0, bucketed) = files.partition(_.kind == "l0")
     val wantsAll = (0 until snap.numBuckets).forall(buckets.contains)
     if (wantsAll || l0.isEmpty) readFiles(snap, files)
@@ -458,10 +438,11 @@ final class LakeTable private (val root: String, val spark: SparkSession) {
 
   /** Every file that can hold rows of key `key`, across ALL bucket-layout
     * eras: for each era the key's bucket id under that era's hash, plus any
-    * unflushed L0 files, then [[KeyBloom]] skipping on top. Manifests whose
-    * bucket stats intersect no candidate id are never opened. Callers must
-    * still row-filter on the key (bloom false positives; bucket companions;
-    * bucket-spanning L0 rows). */
+    * unflushed L0 files, then [[KeyBloom]] skipping on top (a file without
+    * a bloom always survives). Manifests whose bucket stats intersect no
+    * candidate id are never opened. Callers must still row-filter on the
+    * key (bloom false positives; bucket companions; bucket-spanning L0
+    * rows). */
   def filesForKey(snap: Snapshot, key: String): Seq[DataFileMeta] = {
     val byLayout = snap.layoutsList.map(n => n -> LakeTable.bucketOf(key, n)).toMap
     val candidates = byLayout.values.toSet + LakeTable.L0Bucket
@@ -478,25 +459,9 @@ final class LakeTable private (val root: String, val spark: SparkSession) {
       .filter(f => f.keyBloom == null || KeyBloom.mightContain(f.keyBloom, key))
   }
 
-  /** Point-lookup read: only the files [[filesForKey]] admits. The caller
-    * MUST filter `repo = key` on the result. */
-  def readForKey(key: String): DataFrame = {
-    val snap = snapshot
-    readFiles(snap, filesForKey(snap, key))
-  }
-
-  /** Multi-key point lookup (`repo IN (…)`): ONE read plan over the
-    * deduplicated union of [[filesForKey]] file sets — per-era bucket ids
-    * and key blooms prune per key, so an n-key lookup opens at most n× the
-    * files of a single lookup, never the table. Metadata cost is
-    * O(keys × eras) driver-side hash/bloom probes (manifests are cached).
-    * The caller MUST filter `repo IN keys` on the result. */
-  def readForKeys(keys: Seq[String]): DataFrame = {
-    val snap = snapshot
-    readFiles(snap, filesForKeys(snap, keys))
-  }
-
-  /** The deduplicated union of [[filesForKey]] over `keys`. */
+  /** The deduplicated union of [[filesForKey]] over `keys`: an n-key
+    * lookup opens at most n× the files of a single lookup, never the
+    * table, for O(keys × eras) driver-side hash/bloom probes. */
   def filesForKeys(snap: Snapshot, keys: Seq[String]): Seq[DataFileMeta] =
     keys.distinct.flatMap(k => filesForKey(snap, k)).distinctBy(_.path)
 
@@ -719,7 +684,7 @@ final class LakeTable private (val root: String, val spark: SparkSession) {
     require(paths.nonEmpty, "addFiles: no files given")
     // dedup by absolute path: the same source file passed twice (dir walk +
     // explicit arg) would be hard-linked and committed twice, doubling rows
-    // in stats/changelog reads (r6 advice) — mirror readForKeys' distinct
+    // in stats/changelog reads (r6 advice) — mirror filesForKeys' distinct
     val srcs = paths.map(p => Paths.get(p).toAbsolutePath.normalize).distinct
     srcs.foreach(p => require(Files.isRegularFile(p), s"addFiles: not a file: $p"))
     // schema from the first file's footer — driver-side IO, no data pages,

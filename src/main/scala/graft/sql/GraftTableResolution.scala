@@ -20,13 +20,14 @@ import graft.cdc.{LakeMerge, MergeEngine}
   * the single-exchange LWW shape all survive (PlanSpec gates them through
   * the SQL path).
   *
-  * Point-lookup pruning: a top-level `repo = 'x'`, `repo IN (…)`, or
+  * Point lookups: a top-level `repo = 'x'`, `repo IN (…)`, or
   * OR-of-equalities conjunct directly above the relation routes through
-  * the per-key metadata read (`readForKey`/`readForKeys`) instead —
-  * METADATA bucket + key-bloom pruning per key (a handful of files each,
-  * plus unflushed L0) — with the original filter retained on top as the
-  * residual. This is how the library's zero-job point-lookup contract
-  * reaches SQL users, including multi-key lookups.
+  * the library's point read (`LakeMerge.readRepos` — metadata bucket +
+  * key-bloom pruning per key, rows read and LWW-folded on the driver) with
+  * the original filter retained on top as the residual. The substituted
+  * plan is a local relation, so Spark folds the residual and projection
+  * into a `LocalTableScan`: a SQL point lookup runs zero Spark jobs, like
+  * the Scala API's.
   */
 class GraftTableResolution(spark: SparkSession) extends Rule[LogicalPlan] {
 
@@ -213,7 +214,7 @@ class GraftTableResolution(spark: SparkSession) extends Rule[LogicalPlan] {
 
   /** A top-level point-lookup conjunct on `repo`, by exprId: a single
     * equality, an `IN`-list of literals, or an OR-tree of equalities all
-    * yield the key set for metadata (bucket + bloom) pruning. */
+    * yield the key set for the driver-side point read. */
   private def repoKeys(cond: Expression, repoAttr: Attribute): Option[Seq[String]] = {
     def eq(e: Expression): Option[String] = e match {
       case EqualTo(a: Attribute, Literal(v: UTF8String, StringType))
@@ -237,19 +238,13 @@ class GraftTableResolution(spark: SparkSession) extends Rule[LogicalPlan] {
   private def substitute(
       r: DataSourceV2Relation, t: GraftTable, repo: Option[Seq[String]]): LogicalPlan = {
     val lake = t.lake(spark)
-    // the WINDOW-shaped live view (not readState's max_by shape): SQL can
-    // project any subset, and only the window form lets Catalyst prune
-    // unreferenced payload columns down into the parquet scan — a
-    // `SELECT repo FROM graft.t` must not read `content`
+    // point lookups take the library's driver-side point read; every other
+    // read takes the WINDOW-shaped live view (not readState's max_by
+    // shape): SQL can project any subset, and only the window form lets
+    // Catalyst prune unreferenced payload columns down into the parquet
+    // scan — a `SELECT repo FROM graft.t` must not read `content`
     val df = (t.asOfVersion, repo) match {
-      case (None, Some(ks)) =>
-        // metadata pruning for the point lookup (per-era hash bucket +
-        // per-file key bloom, per key), then the prunable resolution over
-        // only the files that can hold any of the keys
-        import org.apache.spark.sql.functions.col
-        MergeEngine.prunableLiveView(
-          if (ks.sizeIs == 1) lake.readForKey(ks.head).where(col("repo") === ks.head)
-          else lake.readForKeys(ks).where(col("repo").isin(ks: _*)))
+      case (None, Some(ks)) => LakeMerge.readRepos(lake, ks)
       case (None, None) => MergeEngine.prunableLiveView(lake.read())
       case (Some(v), _) =>
         // versioned reads resolve the snapshot as-of; the repo residual
@@ -301,7 +296,8 @@ class GraftTableResolution(spark: SparkSession) extends Rule[LogicalPlan] {
       case u: UpdateTable if u.resolved && graftOf(u.table).isDefined =>
         updateRewrite(u).getOrElse(u)
       // Filter directly over the relation: route a repo point-lookup through
-      // metadata pruning (matched top-down so this wins over the bare case)
+      // the driver-side point read (matched top-down so this wins over the
+      // bare case)
       case f @ Filter(cond, child) if f.resolved && readable(child).isDefined =>
         val (r, t) = readable(child).get
         val repo = r.output.find(_.name == "repo").flatMap(a => repoKeys(cond, a))

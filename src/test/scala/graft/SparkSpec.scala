@@ -9,6 +9,20 @@ trait SparkSpec extends AnyFunSuite {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Runs `f` and counts the Spark jobs it started: job ids are
+    * sequential, so the ids of two sentinel jobs bound every job started
+    * between them (a listener would see jobs only asynchronously). */
+  def jobsDuring[A](f: => A): (A, Int) = {
+    def sentinel(): Int = {
+      val job = spark.sparkContext.parallelize(Seq(1), 1).countAsync()
+      job.get()
+      job.jobIds.head
+    }
+    val s0 = sentinel()
+    val a = f
+    (a, sentinel() - s0 - 1)
+  }
 }
 
 object SparkSpec {

@@ -72,19 +72,20 @@ class KeyBloomSpec extends SparkSpec {
     assert(all.nonEmpty && all.forall(_.keyBloom != null),
       "every staged file must carry a bloom (few distinct repos → dictionary-encoded)")
 
-    val forAlpha = t.filesOf(t.snapshot, Set(0, LakeTable.L0Bucket), Some("alpha"))
-    val forGamma = t.filesOf(t.snapshot, Set(0, LakeTable.L0Bucket), Some("gamma"))
-    val forNone = t.filesOf(t.snapshot, Set(0, LakeTable.L0Bucket), Some("no_such_repo"))
+    val forAlpha = t.filesForKey(t.snapshot, "alpha")
+    val forGamma = t.filesForKey(t.snapshot, "gamma")
+    val forNone = t.filesForKey(t.snapshot, "no_such_repo")
     assert(forAlpha.size == 2, s"alpha is in exactly 2 files, got ${forAlpha.size}")
     assert(forGamma.size == 1, s"gamma is in exactly 1 file, got ${forGamma.size}")
     assert(forNone.isEmpty, "a never-written repo must prune every file")
 
-    // pruned read returns exactly the unpruned result
-    val pruned = t.readBuckets(Set(0, LakeTable.L0Bucket), Some("alpha"))
-      .where($"repo" === "alpha")
+    // the pruned driver read (readRepo's, before its LWW fold) returns
+    // exactly the unpruned result
+    val (schema, pruned) = t.readKeysLocal(Seq("alpha"))
     val full = t.read().where($"repo" === "alpha")
-    assert(pruned.collect().map(_.toString).sorted.toSeq ==
-      full.collect().map(_.toString).sorted.toSeq)
+    assert(schema == full.schema)
+    assert(pruned.map(_.toSeq(schema).mkString("|")).sorted ==
+      full.collect().toSeq.map(_.toSeq.mkString("|")).sorted)
   }
 
   test("L0 files get blooms too and prune in point lookups") {
@@ -94,8 +95,7 @@ class KeyBloomSpec extends SparkSpec {
     writeBatch(t, Seq("ccc"), 100L, kind = "l0")
     val l0 = t.files.filter(_.kind == "l0")
     assert(l0.nonEmpty && l0.forall(_.keyBloom != null))
-    val b = LakeTable.bucketOf("aaa", 4)
-    val files = t.filesOf(t.snapshot, Set(b, LakeTable.L0Bucket), Some("aaa"))
+    val files = t.filesForKey(t.snapshot, "aaa")
     assert(files.forall(f => KeyBloom.mightContain(f.keyBloom, "aaa")))
     assert(!files.exists(_.path == l0.find(f =>
       !KeyBloom.mightContain(f.keyBloom, "aaa")).map(_.path).getOrElse("")))
@@ -128,7 +128,7 @@ class KeyBloomSpec extends SparkSpec {
     java.nio.file.Files.writeString(manifest, stripped)
     val t2 = LakeTable.load(spark, root) // fresh instance → no manifest cache
     assert(t2.files.forall(_.keyBloom == null), "legacy entry must deserialize with null bloom")
-    assert(t2.filesOf(t2.snapshot, Set(0), Some("not_there")).size == t2.files.size,
+    assert(t2.filesForKey(t2.snapshot, "not_there").size == t2.files.size,
       "bloom-less files must never be pruned")
   }
 }

@@ -541,22 +541,13 @@ class LakeTableSpec extends SparkSpec {
       .toDF(cdcSchema.fieldNames.toSeq: _*)
       .withColumn("bucket", graft.cdc.LakeMerge.bucketOf(col("repo"), 8))
     t.appendCommit(t.stage(df, 0))
-    // job ids are sequential: the ids of two sentinel jobs bound every job
-    // started between them (a listener would see jobs only asynchronously)
-    def sentinel(): Int = {
-      val f = spark.sparkContext.parallelize(Seq(1), 1).countAsync()
-      f.get()
-      f.jobIds.head
-    }
-    val s0 = sentinel()
     // building the lookup must not launch a job (an old path ran a one-row
     // Spark job just to evaluate the bucket expression) ...
-    val plan = graft.cdc.LakeMerge.readRepo(t, "repo_7")
-    val s1 = sentinel()
-    assert(s1 == s0 + 1, "plan construction launched a Spark job")
+    val (plan, planJobs) = jobsDuring(graft.cdc.LakeMerge.readRepo(t, "repo_7"))
+    assert(planJobs == 0, "plan construction launched a Spark job")
     // ... and neither may its action: the lookup resolves on the driver
-    val rows = plan.collect()
-    assert(sentinel() == s1 + 1, "the collect launched a Spark job")
+    val (rows, runJobs) = jobsDuring(plan.collect())
+    assert(runJobs == 0, "the collect launched a Spark job")
     assert(rows.length == 1 && rows(0).getAs[String]("content") == "v7")
   }
 

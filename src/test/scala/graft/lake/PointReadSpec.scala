@@ -8,15 +8,17 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 import graft.SparkSpec
 import graft.cdc.{CdcStream, LakeMerge}
+import graft.sql.GraftSql
 
-/** The driver-side point read ([[LakeMerge.readRepo]] / `readRepos`) must
-  * return exactly what the Spark-resolved full state returns for the same
-  * keys — rows, column names, order and types — on tables whose history
-  * exercises every reconciliation and pruning rule the read depends on:
-  * added, widened (int→long), renamed, dropped and re-added columns; a
-  * bucket-layout evolution; base, delta and L0 files side by side; an
-  * `add_files` import; tombstones and null-`op` rows; absent keys. Each
-  * property case builds one table from seeded random batches. */
+/** The driver-side point read ([[LakeMerge.readRepo]] / `readRepos`, and
+  * SQL `repo IN (…)` lookups, which take it) must return exactly what the
+  * Spark-resolved full state returns for the same keys — rows, column
+  * names, order and types — on tables whose history exercises every
+  * reconciliation and pruning rule the read depends on: added, widened
+  * (int→long), renamed, dropped and re-added columns; a bucket-layout
+  * evolution; base, delta and L0 files side by side; an `add_files`
+  * import; tombstones and null-`op` rows; absent keys. Each property case
+  * builds one table from seeded random batches. */
 class PointReadSpec extends SparkSpec {
   import spark.implicits._
 
@@ -41,6 +43,15 @@ class PointReadSpec extends SparkSpec {
         if (op == "D") null else rnd.alphanumeric.take(6).mkString)
     }
 
+  // catalog root of the SQL leg: every table is built as `graft.ns.t<n>`
+  private lazy val warehouse = {
+    val w = tmpDir("pointread-wh")
+    java.nio.file.Files.createDirectories(Paths.get(s"$w/ns"))
+    w
+  }
+  private lazy val sql = GraftSql.attach(spark, root = Some(warehouse))
+  private val tables = new java.util.concurrent.atomic.AtomicInteger
+
   private def rowsOf(df: DataFrame): Seq[String] =
     df.collect().toSeq.map(_.toSeq.map(String.valueOf).mkString("|")).sorted
 
@@ -50,7 +61,8 @@ class PointReadSpec extends SparkSpec {
     val lsns = rnd.shuffle((1L to 1000L).toVector).iterator
     def batch(n: Int) = events(rnd, lsns, n)
     val base = CdcStream.binlogSchema.add("score", IntegerType)
-    val t = LakeTable.create(spark, tmpDir("pointread"), base, numBuckets = 4)
+    val t = LakeTable.create(spark, s"$warehouse/ns/t${tables.getAndIncrement()}",
+      base, numBuckets = 4)
 
     // era 0: score INT; compacted into base files
     LakeMerge.mergeBatch(t, batch(20).map(e => (e.repo, e.path, e.commit, e.lsn, e.op,
@@ -105,6 +117,11 @@ class PointReadSpec extends SparkSpec {
         got.schema == state.schema && rowsOf(got) == expected(Seq(k))
       } && keySets.forall { ks =>
         val got = LakeMerge.readRepos(t, ks)
+        got.schema == state.schema && rowsOf(got) == expected(ks)
+      } && keySets.filter(_.nonEmpty).forall { ks =>
+        val name = Paths.get(t.root).getFileName
+        val got = sql.sql(s"SELECT * FROM graft.ns.$name WHERE repo IN " +
+          ks.map(k => s"'$k'").mkString("(", ", ", ")"))
         got.schema == state.schema && rowsOf(got) == expected(ks)
       }
     }

@@ -2,7 +2,7 @@ package graft.sql
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
@@ -91,26 +91,46 @@ class GraftSqlSpec extends SparkSpec {
       .map(_.relation.location.inputFiles.length).sum
   }
 
+  /** Analyzes and plans `query`, then collects it, requiring zero Spark
+    * jobs for each and an executed plan that is one `LocalTableScan`. */
+  private def localLookup(query: String): Array[org.apache.spark.sql.Row] = {
+    val (df, planJobs) = jobsDuring {
+      val df = sql.sql(query)
+      df.queryExecution.executedPlan
+      df
+    }
+    assert(planJobs == 0, s"planning ran $planJobs Spark jobs: $query")
+    assert(df.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec],
+      s"lookup must plan a LocalTableScan:\n${df.queryExecution.executedPlan}")
+    val (rows, runJobs) = jobsDuring(df.collect())
+    assert(runJobs == 0, s"the collect ran $runJobs Spark jobs: $query")
+    rows
+  }
+
+  private def rowSet(rows: Array[org.apache.spark.sql.Row]): Set[Seq[Any]] =
+    rows.map(_.toSeq).toSet
+
   test("point lookup via SQL: metadata bucket pruning + parquet pushdown survive") {
+    // the lookup takes readRepo's driver read — per-era bucket + key-bloom
+    // pruning, the key pushed into the parquet reader — and the residual
+    // filter and projection fold into its local relation
     val t = LakeTable.load(spark, tablePath)
     val repo = LakeMerge.readState(t).select("repo").head().getString(0)
-    val lookup = sql.sql(s"SELECT * FROM graft.ns.t WHERE repo = '$repo'")
-    val full = sql.sql("SELECT * FROM graft.ns.t")
-    // correct result
-    assert(lib(lookup) == lib(LakeMerge.readRepo(t, repo)))
-    // METADATA pruning: the lookup's scan opens a strict subset of files
-    assert(scannedFiles(lookup) < scannedFiles(full),
-      s"bucket pruning lost through SQL: ${scannedFiles(lookup)} vs ${scannedFiles(full)}")
-    // parquet-level pushdown of the residual predicate
-    val planStr = lookup.queryExecution.executedPlan.toString
-    assert(planStr.contains("PushedFilters") && planStr.contains("EqualTo(repo"),
-      s"repo filter not pushed to the scan:\n$planStr")
+    assert(t.filesForKey(t.snapshot, repo).size < t.files.size,
+      "bucket pruning must bite on the fixture")
+    val rows = localLookup(s"SELECT * FROM graft.ns.t WHERE repo = '$repo'")
+    val expected = LakeMerge.readRepo(t, repo)
+    assert(rows.nonEmpty && rows.length == expected.count())
+    assert(rowSet(rows) == lib(expected))
+    // a projection and a second conjunct fold into the same local scan
+    val narrow = localLookup(
+      s"SELECT path, lsn FROM graft.ns.t WHERE repo = '$repo' AND lsn > 0")
+    assert(rowSet(narrow) == lib(expected.where(col("lsn") > 0).select("path", "lsn")))
   }
 
   test("multi-key lookup via SQL: IN-list and OR-of-equalities prune to the per-key file sets") {
-    import spark.implicits._
     // multi-era table: batch 1 under 4 buckets, rebucket(16), batch 2 —
-    // the exact scanned-file count must equal the per-key metadata union
+    // the files the lookup reads are exactly the per-key metadata union
     val path = s"$warehouse/ns/multi"
     val t = LakeTable.create(spark, path, CdcStream.binlogSchema, numBuckets = 4)
     val events = EventGen.events(spark, 6000L, nRepos = 30, pathsPerRepo = 5,
@@ -120,26 +140,28 @@ class GraftSqlSpec extends SparkSpec {
     LakeMerge.mergeBatch(t, events.where(col("lsn") >= 3000L), Some(("mk", 1L)))
     val t2 = LakeTable.load(spark, path)
     val keys = Seq("repo_00003", "repo_00017")
-    val expectedFiles = keys
-      .flatMap(k => t2.filesForKey(t2.snapshot, k)).map(_.path).distinct.size
+    val perKey = keys.flatMap(k => t2.filesForKey(t2.snapshot, k)).map(_.path)
+    val union = t2.filesForKeys(t2.snapshot, keys).map(_.path)
+    assert(union.sorted == perKey.distinct.sorted,
+      s"the multi-key read must open exactly the per-key union: $union vs $perKey")
+    assert(union.size < t2.files.size,
+      s"pruning must bite on a multi-era table (${union.size} of ${t2.files.size})")
 
-    val inList = sql.sql(
+    val expected = lib(LakeMerge.readRepos(t2, keys))
+    assert(expected.map(_.head).toSet == keys.toSet, "both keys must be live")
+    val inList = localLookup(
       s"SELECT * FROM graft.ns.multi WHERE repo IN ('${keys(0)}', '${keys(1)}')")
-    assert(lib(inList) == lib(LakeMerge.readRepos(t2, keys)))
-    assert(scannedFiles(inList) == expectedFiles,
-      s"IN-list lookup must scan exactly the per-key union: " +
-        s"${scannedFiles(inList)} vs $expectedFiles (table has ${t2.files.size})")
-    assert(scannedFiles(inList) < t2.files.size, "pruning must bite on a multi-era table")
-
-    val orShape = sql.sql(
+    assert(rowSet(inList) == expected)
+    val orShape = localLookup(
       s"SELECT * FROM graft.ns.multi WHERE repo = '${keys(0)}' OR repo = '${keys(1)}'")
-    assert(lib(orShape) == lib(inList))
-    assert(scannedFiles(orShape) == expectedFiles, "OR-of-equalities must prune like IN")
+    assert(rowSet(orShape) == expected)
 
-    // a non-literal disjunct disables pruning but stays correct
+    // a non-literal disjunct stays on the Spark file scan, and stays correct
     val mixed = sql.sql(
       s"SELECT * FROM graft.ns.multi WHERE repo = '${keys(0)}' OR length(repo) = 0")
     assert(lib(mixed) == lib(LakeMerge.readRepos(t2, Seq(keys(0)))))
+    assert(scannedFiles(mixed) == t2.files.size,
+      "a non-key predicate must resolve over the full Spark scan")
   }
 
   test("key-bloom file skipping: a point lookup scans only files carrying the key") {
@@ -158,15 +180,16 @@ class GraftSqlSpec extends SparkSpec {
     val t2 = LakeTable.load(spark, path)
     assert(t2.files.forall(_.keyBloom != null),
       "merge output must carry dictionary-lifted blooms (repos repeat across paths)")
-    val expected = t2.files.count(f =>
-      graft.lake.KeyBloom.mightContain(f.keyBloom, "gamma"))
-    assert(expected < t2.files.size, "gamma must be absent from some files' blooms")
-    val lookup = sql.sql("SELECT * FROM graft.ns.bl WHERE repo = 'gamma'")
-    assert(lookup.count() == 40)
-    assert(scannedFiles(lookup) == expected,
-      s"lookup must scan exactly the bloom-admitted files " +
-        s"(${scannedFiles(lookup)} vs $expected of ${t2.files.size})")
-    assert(lib(lookup) == lib(LakeMerge.readRepo(t2, "gamma")))
+    val expected = t2.files.filter(f =>
+      graft.lake.KeyBloom.mightContain(f.keyBloom, "gamma")).map(_.path)
+    assert(expected.size < t2.files.size, "gamma must be absent from some files' blooms")
+    val admitted = t2.filesForKey(t2.snapshot, "gamma").map(_.path)
+    assert(admitted.sorted == expected.sorted,
+      s"the lookup must read exactly the bloom-admitted files " +
+        s"(${admitted.size} vs ${expected.size} of ${t2.files.size})")
+    val lookup = localLookup("SELECT * FROM graft.ns.bl WHERE repo = 'gamma'")
+    assert(lookup.length == 40)
+    assert(rowSet(lookup) == lib(LakeMerge.readRepo(t2, "gamma")))
   }
 
   test("column pruning reaches the scan through SQL") {
